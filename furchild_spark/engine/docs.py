@@ -28,136 +28,16 @@ def description_of(model) -> str:
     return " ".join(line.strip() for line in para.splitlines())
 
 
-def _parquet_dir_stats(path: str) -> dict | None:
-    """Row count / bytes / file count / schema from parquet FOOTERS —
-    pyarrow, driver-side, no Spark job. Walks recursively so
-    partition_by subdirectories (insert_overwrite layouts) are covered;
-    skips staged/old swap dirs, which are not the committed table."""
-    import json as _json
-
-    import pyarrow.parquet as pq
-
-    if not os.path.isdir(path):
-        return None
-    rows, nbytes, nfiles = 0, 0, 0
-    schema: dict[str, str] = {}
-    part_vals: dict[str, list] = {}
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [
-            d for d in dirs
-            if not d.endswith(("__staged", "__old")) and not d.startswith(".")
-        ]
-        # Hive-style partition directories (partition_by layouts): the
-        # partition columns live in PATHS, never in footers — collect
-        # their values so the catalog schema matches what a Spark read
-        # of the table resolves
-        for d in dirs:
-            if "=" in d:
-                k, _, v = d.partition("=")
-                part_vals.setdefault(k, []).append(v)
-        for f in files:
-            if not f.endswith(".parquet"):
-                continue
-            fp = os.path.join(root, f)
-            md = pq.ParquetFile(fp).metadata
-            rows += md.num_rows
-            nbytes += os.path.getsize(fp)
-            nfiles += 1
-            # Spark stamps its OWN schema JSON into the footer's
-            # key-value metadata — exact Spark type names (timestamp vs
-            # timestamp_ntz survive), still zero data reads. Merged
-            # across files so append_new_columns evolution is visible.
-            kv = md.metadata or {}
-            sj = kv.get(b"org.apache.spark.sql.parquet.row.metadata")
-            if sj:
-                from pyspark.sql.types import StructType
-
-                for fld in StructType.fromJson(_json.loads(sj)).fields:
-                    schema.setdefault(fld.name, fld.dataType.simpleString())
-            else:  # non-Spark writer: fall back to arrow names
-                sch = pq.read_schema(fp)
-                for n, t in zip(sch.names, sch.types):
-                    schema.setdefault(n, str(t))
-    if nfiles == 0:
-        return None
-    for k, vals in part_vals.items():
-        schema.setdefault(k, _infer_partition_type(vals))
-    return {
-        "row_count": rows,
-        "bytes": nbytes,
-        "files": nfiles,
-        "columns": schema,
-    }
-
-
-def _infer_partition_type(vals: list) -> str:
-    """Spark's partition-column type inference, the subset these
-    warehouses produce: int -> bigint-if-needed -> date -> timestamp ->
-    double -> string."""
-    import datetime as _dt
-
-    vals = [v for v in vals if v != "__HIVE_DEFAULT_PARTITION__"]
-
-    def all_parse(fn) -> bool:
-        try:
-            for v in vals:
-                fn(v)
-            return bool(vals)
-        except (ValueError, TypeError):
-            return False
-
-    if all_parse(int):
-        return (
-            "int"
-            if all(-(2**31) <= int(v) < 2**31 for v in vals)
-            else "bigint"
-        )
-    if all_parse(_dt.date.fromisoformat):
-        return "date"
-    if all_parse(
-        lambda v: _dt.datetime.fromisoformat(v.replace("%3A", ":"))
-    ):
-        return "timestamp"
-    if all_parse(float):
-        return "double"
-    return "string"
-
-
-def _txlog_stats(spark_path: str) -> dict | None:
-    """Stats from the txlog commit manifest: row count is O(1) (recorded
-    at commit from the writers' footers), bytes/files/schema come from
-    the manifest's file list — still zero data reads."""
-    from furchild_spark.engine.txlog import TxTable
-
-    tx = TxTable(None, spark_path)
-    if not tx.exists():
-        return None
-    v = tx.current_version()
-    m = tx._read_manifest(v)
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(m["schema"])
-    nbytes = 0
-    for e in m["files"]:
-        try:
-            nbytes += os.path.getsize(tx._abs(e["path"]))
-        except OSError:
-            pass
-    return {
-        "row_count": m["num_rows"],
-        "bytes": nbytes,
-        "files": len(m["files"]),
-        "columns": {f.name: f.dataType.simpleString() for f in schema.fields},
-        "version": v,
-    }
-
-
 def warehouse_catalog(
     warehouse: str, order, registry, table_format: str = "parquet"
 ) -> dict:
     """The catalog.json half: one stats entry per model that is actually
     materialized in ``warehouse`` (views/ephemerals are correctly
-    absent — they have no warehouse presence)."""
+    absent — they have no warehouse presence). The store of
+    ``table_format`` reads the stats (engine/store.py)."""
+    from .store import make_store
+
+    store = make_store(None, table_format)
     out: dict[str, dict] = {}
     for name in order:
         m = registry[name]
@@ -165,11 +45,7 @@ def warehouse_catalog(
             continue
         path = os.path.join(warehouse, name)
         try:
-            stats = (
-                _txlog_stats(path)
-                if table_format == "txlog"
-                else _parquet_dir_stats(path)
-            )
+            stats = store.stats(path)
         except Exception:  # a single unreadable table must not kill docs
             stats = None
         if stats is not None:

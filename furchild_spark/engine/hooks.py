@@ -26,16 +26,17 @@ def compact_txlog(small_file_mb: float = 32.0):
     """Post-hook: compact the model's TxTable when small files piled up.
 
     No-op (by design, not error) when the run isn't txlog-backed or the
-    table doesn't exist yet — hooks must not break the first build."""
+    table doesn't exist yet — hooks must not break the first build. The
+    run's store decides (``ParquetStore.compact`` does nothing)."""
 
     def hook(ctx) -> None:
         runner, model = ctx.runner, ctx.model
-        if runner.table_format != "txlog" or runner.warehouse_dir is None:
+        if runner.warehouse_dir is None:
             return
-        tx = runner._tx(model.name)
-        if not tx.exists():
-            return
-        tx.compact(small_file_bytes=int(small_file_mb * 1024 * 1024))
+        runner.store.compact(
+            runner._path(model.name), model,
+            small_file_bytes=int(small_file_mb * 1024 * 1024),
+        )
 
     hook.__name__ = f"compact_txlog_{small_file_mb}mb"
     return hook

@@ -29,6 +29,12 @@ Scale design (100 TB):
   via ``unionByName(allowMissingColumns=True)`` + ``mergeSchema`` reads;
   ``sync_all_columns`` is a plain overwrite (new schema wins,
   ``dim_customer.sql:6``).
+
+The Runner does not call this module directly: ``engine/store.py`` picks
+this backend or :mod:`txlog` once per run (``Runner(table_format=...)``).
+The streaming sinks and the vector-index artifacts write here directly.
+:func:`merge_rows` and :func:`predicates_expr` are the key-merge core and
+the ``(col, op, value)`` grammar the txlog backend shares.
 """
 
 from __future__ import annotations
@@ -106,9 +112,7 @@ def parquet_exists(spark: SparkSession, path: str) -> bool:
 # call in the streaming/e2e entries (guide §1.2: remove work, then tune).
 # Above the bound (real cluster-scale tables) the driver must not walk
 # files one by one, so the original distributed merge runs unchanged.
-_SCHEMA_FASTPATH_MAX_FILES = int(
-    os.environ.get("SPARK_GRAFT_SCHEMA_FASTPATH_MAX_FILES", "64")
-)
+_SCHEMA_FASTPATH_MAX_FILES = 64
 
 
 def _uniform_local_schema(path: str) -> bool | None:
@@ -154,9 +158,9 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     the plain parquet read is identical to the merged one, and skipping
     ``mergeSchema`` skips the distributed footer-merge job Spark runs
     eagerly at DataFrame construction. The check is driver-side pyarrow
-    over at most ``SPARK_GRAFT_SCHEMA_FASTPATH_MAX_FILES`` footers (env
-    knob, default 64): bounded driver work locally, and at cluster scale
-    (more files) the distributed merge runs exactly as before.
+    over at most ``_SCHEMA_FASTPATH_MAX_FILES`` (64) footers: bounded
+    driver work locally, and at cluster scale (more files) the
+    distributed merge runs exactly as before.
 
     Concurrent-reader safety across the staged-dir swap: in the window
     between the two commit renames the live dir does not exist, but the
@@ -203,6 +207,18 @@ def _swap_in(spark: SparkSession, path: str, staged_suffix: str = "__staged") ->
     _rename_or_raise(fs, live, old)
     _rename_or_raise(fs, staged, live)
     fs.delete(old, True)
+
+
+def _stage_and_swap(spark: SparkSession, path: str, df: DataFrame) -> None:
+    """Write ``df`` to ``path__staged`` and promote it with
+    :func:`_swap_in`. A staged dir already there is a crashed write's
+    leftover, never the live copy, so it is cleared first."""
+    fs, jvm = _fs(spark, path)
+    staged = _hpath(jvm, path + "__staged")
+    if fs.exists(staged):
+        fs.delete(staged, True)
+    df.write.mode("overwrite").parquet(path + "__staged")
+    _swap_in(spark, path)
 
 
 def _read_back_hinted(spark: SparkSession, path: str, schema) -> DataFrame:
@@ -312,22 +328,17 @@ def replace_slice(
     in_window = (F.col(event_time) >= F.lit(lo)) & (F.col(event_time) < F.lit(hi))
     kept = existing.filter(~F.coalesce(in_window, F.lit(False)))
     merged = kept.unionByName(df, allowMissingColumns=True)
-
-    fs, jvm = _fs(spark, path)
-    staged = _hpath(jvm, path + "__staged")
-    if fs.exists(staged):
-        fs.delete(staged, True)
-    merged.write.mode("overwrite").parquet(path + "__staged")
-    _swap_in(spark, path)
+    _stage_and_swap(spark, path, merged)
     if not return_table:
         return None
     return _read_back_hinted(spark, path, merged.schema)
 
 
 def predicate_expr(col: str, op: str, val):
-    """One ``(col, op, value)`` comparison as a Column — the predicate
-    grammar shared with the txlog manifest skipper (txlog._predicate_expr),
-    so the same ``incremental_predicates`` triples drive BOTH backends."""
+    """One ``(col, op, value)`` comparison as a Column — the one
+    definition of the predicate grammar, shared with txlog (snapshot
+    pruning, merge windows, replace_where, delete), so the same
+    ``incremental_predicates`` triples drive BOTH backends."""
     c = F.col(col)
     return {
         "==": c == F.lit(val),
@@ -338,12 +349,60 @@ def predicate_expr(col: str, op: str, val):
     }[op]
 
 
-def _predicates_expr(predicates):
+def predicates_expr(predicates):
+    """The AND of a non-empty list of ``(col, op, value)`` triples."""
     pred = None
     for col, op, val in predicates:
         c = predicate_expr(col, op, val)
         pred = c if pred is None else (pred & c)
     return pred
+
+
+def merge_rows(
+    existing: DataFrame,
+    updates: DataFrame,
+    keys,
+    predicates=(),
+    keep_newer_ts: str | None = None,
+    allow_missing: bool = True,
+) -> DataFrame:
+    """The key-merge core of every upsert in both backends: existing
+    rows whose key appears in ``updates`` are replaced, all others
+    survive, new keys are inserted. With ``predicates`` only the
+    in-window slice of ``existing`` enters the anti-join; the out-window
+    slice (NULL counts as out) unions back verbatim. ``allow_missing`` is
+    ``unionByName(allowMissingColumns=...)``: parquet always evolves,
+    txlog only when the caller allows it."""
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    out_window = None
+    if predicates:
+        pred = predicates_expr(predicates)
+        out_window = existing.filter(~F.coalesce(pred, F.lit(False)))
+        existing = existing.filter(pred)
+    if keep_newer_ts is not None:
+        # drop updates older than the already-materialized row for their
+        # key (one pruned join on (key, ts) — the conditional-merge
+        # predicate expressed relationally)
+        ex_ts = existing.select(
+            *keys, F.col(keep_newer_ts).alias("__existing_ts")
+        )
+        updates = (
+            updates.join(ex_ts, on=keys, how="left")
+            .filter(
+                F.col("__existing_ts").isNull()
+                | (F.col(keep_newer_ts) >= F.col("__existing_ts"))
+            )
+            .drop("__existing_ts")
+        )
+    # left_anti dedups its right side by definition — no explicit
+    # distinct (it would add a full aggregate + exchange to every merge)
+    kept = existing.join(updates.select(*keys), keys, "left_anti")
+    merged = kept.unionByName(updates, allowMissingColumns=allow_missing)
+    if out_window is not None:
+        merged = out_window.unionByName(
+            merged, allowMissingColumns=allow_missing
+        )
+    return merged
 
 
 def merge_upsert(
@@ -389,27 +448,6 @@ def merge_upsert(
     )
 
 
-def _drop_stale_updates(
-    existing: DataFrame, updates: DataFrame, unique_key: str, keep_newer_ts: str | None
-) -> DataFrame:
-    """Filter out updates older than the already-materialized row for
-    their key (one pruned join on (key, ts) — the conditional-merge
-    predicate expressed relationally)."""
-    if keep_newer_ts is None:
-        return updates
-    ex_ts = existing.select(
-        F.col(unique_key), F.col(keep_newer_ts).alias("__existing_ts")
-    )
-    return (
-        updates.join(ex_ts, on=unique_key, how="left")
-        .filter(
-            F.col("__existing_ts").isNull()
-            | (F.col(keep_newer_ts) >= F.col("__existing_ts"))
-        )
-        .drop("__existing_ts")
-    )
-
-
 def _merge_partition_scoped(
     spark: SparkSession,
     path: str,
@@ -450,27 +488,13 @@ def _merge_partition_scoped(
             )
             row_cond = c if row_cond is None else (row_cond & c)
         cond = row_cond if cond is None else (cond | row_cond)
-    touched_rows = existing.filter(cond)
-    out_window = None
-    if predicates:
-        # incremental_predicates: in-window rows key-match; out-window
-        # rows of the SAME touched partitions carry forward verbatim
-        # (they rewrite with their partition either way — the prune is
-        # the join side, the point of the dbt config)
-        pred = _predicates_expr(predicates)
-        out_window = touched_rows.filter(~F.coalesce(pred, F.lit(False)))
-        touched_rows = touched_rows.filter(pred)
-    updates = _drop_stale_updates(
-        touched_rows, updates, unique_key, keep_newer_ts
+    # incremental_predicates: in-window rows key-match; out-window rows
+    # of the SAME touched partitions carry forward verbatim (they rewrite
+    # with their partition either way — the prune is the join side, the
+    # point of the dbt config)
+    merged = merge_rows(
+        existing.filter(cond), updates, unique_key, predicates, keep_newer_ts
     )
-    # left_anti dedups its right side by definition — no explicit
-    # distinct (it would add a full aggregate + exchange to every merge)
-    kept = touched_rows.join(
-        updates.select(unique_key), unique_key, "left_anti"
-    )
-    merged = kept.unionByName(updates, allowMissingColumns=True)
-    if out_window is not None:
-        merged = out_window.unionByName(merged, allowMissingColumns=True)
     # break lineage so Spark allows overwriting a path we also read from;
     # only the touched partitions' rows are materialized
     merged = merged.localCheckpoint(eager=True)
@@ -495,26 +519,10 @@ def _merge_full(
     """Global merge with a crash-safe directory swap. With
     ``predicates``, only the in-window slice of the existing table
     enters the anti-join; the out-window slice unions back verbatim."""
-    existing = read_table(spark, path)
-    out_window = None
-    if predicates:
-        pred = _predicates_expr(predicates)
-        out_window = existing.filter(~F.coalesce(pred, F.lit(False)))
-        existing = existing.filter(pred)
-    updates = _drop_stale_updates(existing, updates, unique_key, keep_newer_ts)
-    # left_anti dedups its right side by definition — no explicit distinct
-    kept = existing.join(updates.select(unique_key), unique_key, "left_anti")
-    merged = kept.unionByName(updates, allowMissingColumns=True)
-    if out_window is not None:
-        merged = out_window.unionByName(merged, allowMissingColumns=True)
-
-    fs, jvm = _fs(spark, path)
-    staged = _hpath(jvm, path + "__staged")
-    if fs.exists(staged):  # leftover from a crashed write — never the live copy
-        fs.delete(staged, True)
-
-    merged.write.mode("overwrite").parquet(path + "__staged")
-    _swap_in(spark, path)
+    merged = merge_rows(
+        read_table(spark, path), updates, unique_key, predicates, keep_newer_ts
+    )
+    _stage_and_swap(spark, path, merged)
     if not return_table:
         return None
     return _read_back_hinted(spark, path, merged.schema)
@@ -572,13 +580,7 @@ def compact(
     n_files = max(1, -(-total // target_file_bytes))  # ceil
 
     df = spark.read.parquet(path).coalesce(int(n_files))
-    df = df.localCheckpoint(eager=True)
-
-    staged = _hpath(jvm, path + "__staged")
-    if fs.exists(staged):
-        fs.delete(staged, True)
-    df.write.mode("overwrite").parquet(path + "__staged")
-    _swap_in(spark, path)
+    _stage_and_swap(spark, path, df.localCheckpoint(eager=True))
     out_fs_files = [
         f
         for f in fs.listStatus(live)

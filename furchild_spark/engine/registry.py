@@ -40,7 +40,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from . import materialize as mat
-from . import snapshot as snap
+from .store import make_store
 
 DEFAULT_VARS = {
     # reference dbt_project.yml:12-14
@@ -560,7 +560,9 @@ class Runner:
         on_run_start=(),
         on_run_end=(),
     ) -> None:
-        """``table_format`` selects the warehouse storage backend:
+        """``table_format`` selects the warehouse storage backend. The
+        choice is made once, here: ``engine.store.make_store`` returns the
+        run's store, and every read, write and hook goes through it.
 
         - ``"parquet"`` (default): plain parquet dirs with the crash-safe
           staged-dir swap commit — repairable after a crash, but a reader
@@ -572,7 +574,8 @@ class Runner:
           vacuum. Incremental models map to ``TxTable.merge`` (file-scoped
           when the model declares a single ``partition_by`` column, so
           merge cost is O(touched files), mirroring Delta/Iceberg
-          ``MERGE INTO`` semantics).
+          ``MERGE INTO`` semantics). ``tx_target_files`` is the explicit
+          data-file count of its clustered writes (see ``TxlogStore``).
 
         ``backfill_start`` / ``backfill_end`` are dbt's
         ``--event-time-start/--event-time-end``: an EXPLICIT rebuild
@@ -602,8 +605,7 @@ class Runner:
         and only when the table exists there; anything else builds
         normally (dbt's fallback).
         """
-        if table_format not in ("parquet", "txlog"):
-            raise ValueError(f"unknown table_format {table_format!r}")
+        self.store = make_store(spark, table_format, tx_target_files)
         self.spark = spark
         self.registry = registry
         self._sources = sources
@@ -612,12 +614,6 @@ class Runner:
         self.full_refresh = full_refresh
         self.empty = empty
         self.cache_refs = cache_refs
-        self.table_format = table_format
-        # txlog only: explicit data-file count for clustered writes. Small
-        # fixture-scale batches need it because AQE folds a column-only
-        # range repartition into one file (killing file-scoped merges);
-        # at scale None is right — AQE sizes files from data volume.
-        self.tx_target_files = tx_target_files
         self.defer_to = defer_to
         # dbt on-run-start / on-run-end: project-level hooks around the
         # whole invocation (run and build). Callables taking an
@@ -800,15 +796,11 @@ class Runner:
             # a dry-run artifact in the defer warehouse is a schema, not
             # data — build locally instead of reading zero rows
             return None
-        df = None
-        if self.table_format == "txlog":
-            from . import txlog
-
-            tx = txlog.TxTable(self.spark, path)
-            df = tx.snapshot() if tx.exists() else None
-        elif mat.parquet_exists(self.spark, path):
-            df = mat.read_table(self.spark, path)
-        if df is not None and self.empty:
+        model = self.registry._models.get(name)
+        if not self.store.exists(path, model):
+            return None
+        df = self.store.read(path, model)
+        if self.empty:
             # --empty limits deferred refs too (they are inputs, not
             # this run's targets)
             df = df.limit(0)
@@ -819,33 +811,6 @@ class Runner:
         if self.warehouse_dir is None:
             return None
         return f"{self.warehouse_dir}/{name}"
-
-    def _tx(self, name: str):
-        """The model's TxTable handle (txlog backend only). New data files
-        cluster+carry footer stats on the model's partition_by columns —
-        plus the event_time column for microbatch models, so each batch's
-        ``replace_where`` slice prunes to the touched files instead of
-        rewriting the whole table (r6 ADVICE)."""
-        from . import txlog
-
-        model = self.registry[name] if name in self.registry else None
-        cluster = tuple(model.partition_by) if model else ()
-        stats = cluster
-        if model is not None and getattr(model, "event_time", None):
-            stats = tuple(dict.fromkeys(cluster + (model.event_time,)))
-        if model is not None and model.incremental_predicates:
-            # footer stats on the predicate columns are what lets the
-            # merge prune whole files to the predicate window — and
-            # clustering on them gives each file a narrow range to
-            # prune against (without it every file straddles the window)
-            pcols = tuple(p[0] for p in model.incremental_predicates)
-            cluster = tuple(dict.fromkeys(cluster + pcols))
-            stats = tuple(dict.fromkeys(stats + pcols))
-        tx = txlog.TxTable(
-            self.spark, self._path(name), cluster_by=cluster, stats_cols=stats
-        )
-        tx.target_files = self.tx_target_files
-        return tx
 
     def should_full_refresh(self, model: Model) -> bool:
         """dbt's should_full_refresh(): the model-level ``full_refresh``
@@ -865,19 +830,15 @@ class Runner:
         # recursive listing of the table dir. _build records True after
         # it materializes.
         if name not in self._exists:
-            self._exists[name] = (
-                self._tx(name).exists()
-                if self.table_format == "txlog"
-                else mat.parquet_exists(self.spark, path)
+            self._exists[name] = self.store.exists(
+                path, self.registry._models.get(name)
             ) and not mat.is_dry_run(self.spark, path)
         return self._exists[name]
 
     def existing(self, name: str) -> DataFrame | None:
         if not self.has_existing(name):
             return None
-        if self.table_format == "txlog":
-            return self._tx(name).snapshot()
-        return mat.read_table(self.spark, self._path(name))
+        return self.store.read(self._path(name), self.registry._models.get(name))
 
     def _enforce_contract(self, model: Model, df: DataFrame) -> None:
         """dbt model contract (contract: enforced: true): the built
@@ -985,119 +946,38 @@ class Runner:
             # SCD2: applies on EVERY run (dbt `dbt snapshot` semantics) —
             # the first run initializes, later runs version-merge
             assert model.unique_key, f"snapshot model {model.name} needs unique_key"
-            if self.table_format == "txlog":
-                snap.validate_snapshot_source(
-                    df, model.unique_key, model.snapshot_strategy,
-                    model.updated_at,
-                )
-                tx = self._tx(model.name)
-
-                def apply_snapshot(current):
-                    return snap.scd2_apply(
-                        df,
-                        current,
-                        model.unique_key,
-                        strategy=model.snapshot_strategy,
-                        updated_at=model.updated_at,
-                        check_cols=(
-                            list(model.check_cols) if model.check_cols
-                            else None
-                        ),
-                        now=self.now,
-                    )
-
-                # compare-and-swap: losing a concurrent-writer race
-                # re-runs the SCD2 transform on the winner's snapshot
-                # instead of clobbering it with a stale merge
-                tx.transform(apply_snapshot, op="snapshot")
-                self._exists[model.name] = True
-                return tx.snapshot()
-            return snap.snapshot_merge(
-                self.spark,
-                path,
-                df,
-                model.unique_key,
-                strategy=model.snapshot_strategy,
-                updated_at=model.updated_at,
-                check_cols=list(model.check_cols) if model.check_cols else None,
-                now=self.now,
-            )
-        if model.materialized == "incremental" and ctx.is_incremental():
+            out = self.store.snapshot(path, model, df, self.now)
+        elif model.materialized == "incremental" and ctx.is_incremental():
             if model.incremental_strategy == "append":
-                if self.table_format == "txlog":
-                    tx = self._tx(model.name)
-                    tx.append(df)
-                    self._exists[model.name] = True
-                    return tx.snapshot()
-                return mat.append_rows(
-                    self.spark, path, df, partition_by=model.partition_by
+                out = self.store.append(path, model, df)
+            elif model.incremental_strategy == "insert_overwrite":
+                out = self.store.insert_overwrite(path, model, df)
+            else:
+                assert model.unique_key, (
+                    f"incremental model {model.name} needs unique_key"
                 )
-            if model.incremental_strategy == "insert_overwrite":
-                if self.table_format == "txlog":
-                    if len(model.partition_by) != 1:
-                        raise ValueError(
-                            f"model {model.name}: txlog insert_overwrite "
-                            "needs exactly one partition_by column (the "
-                            "file-scope key)"
-                        )
-                    tx = self._tx(model.name)
-                    tx.replace_scope(df, model.partition_by[0])
-                    self._exists[model.name] = True
-                    return tx.snapshot()
-                return mat.insert_overwrite(
-                    self.spark, path, df, model.partition_by
-                )
-            assert model.unique_key, f"incremental model {model.name} needs unique_key"
-            if self.table_format == "txlog":
-                tx = self._tx(model.name)
-                # file-scoped merge when a single partition column is
-                # declared (the same stable-scope precondition as the
-                # parquet backend's partition-scoped overwrite)
-                scope = (
-                    model.partition_by[0]
-                    if len(model.partition_by) == 1
-                    else None
-                )
-                tx.merge(
-                    df, [model.unique_key], scope_col=scope,
-                    predicates=model.incremental_predicates,
-                )
-                self._exists[model.name] = True
-                return tx.snapshot()
-            merged = mat.merge_upsert(
-                self.spark, path, df, model.unique_key,
-                partition_by=model.partition_by,
-                predicates=model.incremental_predicates,
+                out = self.store.merge(path, model, df)
+        else:
+            # table / transient / first incremental run → full overwrite.
+            # Dry runs write unpartitioned: partitionBy on a zero-row frame
+            # emits NO data file (partition dirs need rows), which would
+            # leave the table schema-less; the flat empty file keeps every
+            # column — including the partition columns — in the footer.
+            out = self.store.overwrite(
+                path, model, df,
+                partition_by=() if self.empty else model.partition_by,
             )
-            return merged
-        if self.table_format == "txlog":
-            tx = self._tx(model.name)
-            tx.overwrite(df)
             if self.empty:
+                # the artifact is a schema, not data: mark it so a later
+                # incremental run full-builds instead of merging the
+                # lookback window into a zero-row base
                 mat.mark_dry_run(self.spark, path)
                 self._exists[model.name] = False
-            else:
-                mat.clear_dry_run(self.spark, path)
-                self._exists[model.name] = True
-            return tx.snapshot()
-        # table / transient / first incremental run → full overwrite.
-        # Dry runs write unpartitioned: partitionBy on a zero-row frame
-        # emits NO data file (partition dirs need rows), which would leave
-        # the table schema-less; the flat empty file keeps every column —
-        # including the partition columns — in the footer.
-        out = mat.overwrite(
-            self.spark, path, df,
-            partition_by=() if self.empty else model.partition_by,
-        )
-        if self.empty:
-            # the artifact is a schema, not data: mark it so a later
-            # incremental run full-builds instead of merging the lookback
-            # window into a zero-row base (a real overwrite clears the
-            # marker with the rest of the dir)
-            mat.mark_dry_run(self.spark, path)
-            self._exists[model.name] = False
-        else:
-            self._exists[model.name] = True
+                return out
+            # a parquet overwrite replaces the dir, marker included; a
+            # txlog overwrite keeps the dir, so the marker goes here
+            mat.clear_dry_run(self.spark, path)
+        self._exists[model.name] = True
         return out
 
     def _build_microbatch(self, model: Model) -> DataFrame:
@@ -1144,7 +1024,6 @@ class Runner:
             batches.append((b, min(_add_one(b, unit), end)))
             b = _add_one(b, unit)
         results = self.microbatch_results.setdefault(model.name, [])
-        tx = self._tx(model.name) if self.table_format == "txlog" else None
         for b0, b1 in batches:
             t0 = _time.perf_counter()
             bctx = ExecutionContext(
@@ -1155,13 +1034,7 @@ class Runner:
             try:
                 out = model.fn(bctx)
                 self._enforce_contract(model, out)
-                if tx is not None:
-                    tx.replace_where(out, [(et, ">=", b0), (et, "<", b1)])
-                else:
-                    mat.replace_slice(
-                        self.spark, path, out, et, b0, b1,
-                        return_table=False,
-                    )
+                self.store.replace_slice(path, model, out, b0, b1)
             except BaseException as e:
                 results.append({
                     "batch": [b0.isoformat(), b1.isoformat()],
@@ -1178,9 +1051,7 @@ class Runner:
                 "seconds": round(_time.perf_counter() - t0, 3),
             })
         self._exists[model.name] = True
-        if tx is not None:
-            return tx.snapshot()
-        return mat.read_table(self.spark, path)
+        return self.store.read(path, model)
 
     def run(
         self,

@@ -85,12 +85,7 @@ def snapshot_merge(
     )
     if existing is None:
         return mat.overwrite(spark, path, merged)
-    fs, jvm = mat._fs(spark, path)
-    staged = mat._hpath(jvm, path + "__staged")
-    if fs.exists(staged):
-        fs.delete(staged, True)
-    merged.write.mode("overwrite").parquet(path + "__staged")
-    mat._swap_in(spark, path)
+    mat._stage_and_swap(spark, path, merged)
     return mat.read_table(spark, path)
 
 

@@ -41,6 +41,12 @@ via per-app batch watermarks committed atomically with their data
 (:meth:`TxTable.write_stream_batch` — the Delta ``txnAppId/txnVersion``
 pattern), and small-file compaction as a pure physical commit
 (:meth:`TxTable.compact`).
+
+The Runner reaches this module only through ``engine/store.py``, the one
+place a run's backend is chosen (``Runner(table_format="txlog")``). The
+key-merge core and the ``(col, op, value)`` grammar are shared with the
+parquet backend (:func:`materialize.merge_rows`,
+:func:`materialize.predicate_expr`).
 """
 
 from __future__ import annotations
@@ -86,19 +92,6 @@ def _stat_comparable(val, lo):
     ):
         return val.isoformat()
     return val
-
-
-def _predicate_expr(col: str, op: str, val):
-    """The shared (col, op, value) → Column grammar used by snapshot
-    pruning, row-level residual filters, and delete — one definition so
-    the supported-op set can never diverge between them."""
-    return {
-        "==": F.col(col) == F.lit(val),
-        "<": F.col(col) < F.lit(val),
-        "<=": F.col(col) <= F.lit(val),
-        ">": F.col(col) > F.lit(val),
-        ">=": F.col(col) >= F.lit(val),
-    }[op]
 
 
 def _bloom_positions(value, bits: int, k: int):
@@ -596,7 +589,7 @@ class TxTable:
             # evolution in NEWER versions cannot leak into this snapshot
             df = self.spark.read.schema(schema).parquet(*files)
         for col, op, val in where or ():
-            df = df.filter(_predicate_expr(col, op, val))
+            df = df.filter(mat.predicate_expr(col, op, val))
         return df
 
     def count(self, version: int | None = None) -> int:
@@ -748,34 +741,10 @@ class TxTable:
             if base == 0:
                 files, rows = self._write_data(updates)
                 manifest = self._manifest_for(updates, "merge", files, rows)
-            elif scope_col is None and predicates:
-                files, rows = self._scoped_merge_files(
-                    updates, key_cols, None, base, allow_evolution,
-                    predicates=predicates,
-                )
-                manifest = self._manifest_for(
-                    updates, "merge", files, rows,
-                    schema=self._evolved_schema(updates, base),
-                )
-            elif scope_col is None:
-                current = self.snapshot(base)
-                # left_anti dedups its right side by definition — no
-                # explicit distinct (it would add an aggregate + exchange)
-                survivors = current.join(
-                    updates.select(*key_cols), on=key_cols, how="left_anti"
-                )
+            else:
                 # evolution: new columns appended, survivors read null for
                 # them; a replaced row's unspecified columns become null
                 # (delete+insert semantics, as in the reference's MERGE)
-                merged = survivors.unionByName(
-                    updates, allowMissingColumns=allow_evolution
-                )
-                files, rows = self._write_data(merged)
-                manifest = self._manifest_for(
-                    merged, "merge", files, rows,
-                    schema=self._evolved_schema(updates, base),
-                )
-            else:
                 files, rows = self._scoped_merge_files(
                     updates, key_cols, scope_col, base, allow_evolution,
                     predicates=predicates,
@@ -800,12 +769,13 @@ class TxTable:
         allow_evolution: bool = False,
         predicates=(),
     ) -> tuple[list[dict], int]:
-        """File lists for a file-scoped merge: (carried ∪ rewritten,
-        total rows). Skipping is conservative — a file without usable
-        stats counts as touched and gets rewritten. A file is touched
-        only if it passes BOTH pruners: the scope-value hit test (when
-        ``scope_col`` is set) and the static ``predicates`` window (when
-        given)."""
+        """File lists for a merge: (carried ∪ rewritten, total rows).
+        Skipping is conservative — a file without usable stats counts as
+        touched and gets rewritten. A file is touched only if it passes
+        BOTH pruners: the scope-value hit test (when ``scope_col`` is
+        set) and the static ``predicates`` window (when given); with
+        neither, every file is touched and this is the plain
+        whole-table merge."""
         m = self._read_manifest(base)
         values = (
             [r[0] for r in mat.collect_scope_values(
@@ -829,30 +799,13 @@ class TxTable:
         schema = StructType.fromJson(m["schema"])
         if touched:
             paths = [self._abs(e["path"]) for e in touched]
-            current = self.spark.read.schema(schema).parquet(*paths)
-            protected = None
-            if predicates:
-                # a touched file can still hold OUT-window rows (footer
-                # ranges straddle the predicate boundary): they carry
-                # forward verbatim, never key-matched — same protection
-                # the parquet backend gives the out-window slice
-                pred = None
-                for col, op, val in predicates:
-                    c = _predicate_expr(col, op, val)
-                    pred = c if pred is None else (pred & c)
-                protected = current.filter(~F.coalesce(pred, F.lit(False)))
-                current = current.filter(pred)
-            # left_anti needs no distinct on its right side
-            survivors = current.join(
-                updates.select(*key_cols), on=key_cols, how="left_anti"
+            # a touched file can still hold OUT-window rows (footer ranges
+            # straddle the predicate boundary): merge_rows carries them
+            # forward verbatim, never key-matched
+            merged = mat.merge_rows(
+                self.spark.read.schema(schema).parquet(*paths), updates,
+                key_cols, predicates, allow_missing=allow_evolution,
             )
-            merged = survivors.unionByName(
-                updates, allowMissingColumns=allow_evolution
-            )
-            if protected is not None:
-                merged = protected.unionByName(
-                    merged, allowMissingColumns=allow_evolution
-                )
         else:
             merged = updates
         new_files, new_rows = self._write_data(merged)
@@ -860,32 +813,44 @@ class TxTable:
         return carried + new_files, carried_rows + new_rows
 
     def _replace(
-        self, df: DataFrame, match_entry, keep_pred, max_retries: int
+        self, df: DataFrame | None, match_entry, keep_pred, max_retries: int
     ) -> int:
-        """Shared core of :meth:`replace_scope` / :meth:`replace_where`:
-        ONE atomic commit in which files that may hold replaced rows are
-        rewritten with ``keep_pred`` applied, files proven untouched carry
-        forward by reference, and ``df``'s (already-written) files are
-        added. The delete and the insert land in the same manifest — a
-        concurrent reader never sees the slice half-gone."""
-        # validate the batch schema BEFORE writing its data files, so a
-        # mismatch can't strand orphans under data/<commit_id> (r6
-        # ADVICE; mirrors append()'s pre-flight)
-        base0 = self.current_version()
-        if base0:
-            self._check_append_schema(df, self._read_manifest(base0), False)
-        files_new, rows_new = self._write_data(df)
+        """Shared core of :meth:`replace_scope` / :meth:`replace_where` /
+        :meth:`delete`: ONE atomic commit in which files that may hold
+        replaced rows are rewritten with ``keep_pred`` applied, files
+        proven untouched carry forward by reference, and ``df``'s
+        (already-written) files are added. The delete and the insert land
+        in the same manifest — a concurrent reader never sees the slice
+        half-gone. ``df=None`` is a pure delete: nothing is added, and
+        when no file may match, no version is committed."""
+        files_new, rows_new = [], 0
+        if df is not None:
+            # validate the batch schema BEFORE writing its data files, so
+            # a mismatch can't strand orphans under data/<commit_id> (r6
+            # ADVICE; mirrors append()'s pre-flight)
+            base0 = self.current_version()
+            if base0:
+                self._check_append_schema(df, self._read_manifest(base0), False)
+            files_new, rows_new = self._write_data(df)
+        op = "replace" if df is not None else "delete"
         for attempt in range(max_retries + 1):
             base = self.current_version()
             if base == 0:
-                manifest = self._manifest_for(df, "replace", files_new, rows_new)
+                if df is None:
+                    raise NoSuchVersionError(f"{self.path}: table has no commits")
+                manifest = self._manifest_for(df, op, files_new, rows_new)
             else:
                 m = self._read_manifest(base)
-                self._check_append_schema(df, m, False)
+                if df is not None:
+                    self._check_append_schema(df, m, False)
                 schema = StructType.fromJson(m["schema"])
                 touched, carried = [], []
                 for e in m["files"]:
                     (touched if match_entry(e) else carried).append(e)
+                if df is None and not touched:
+                    # stats/bloom prove no row matches: deleting nothing
+                    # is a no-op, not a new (identical) version
+                    return base
                 files = list(carried)
                 rows = sum(e["rows"] for e in carried)
                 if touched:
@@ -900,7 +865,7 @@ class TxTable:
                 files += files_new
                 rows += rows_new
                 manifest = self._manifest_for(
-                    df, "replace", files, rows, schema=schema
+                    df, op, files, rows, schema=schema
                 )
             try:
                 return self._commit(manifest, base)
@@ -961,11 +926,7 @@ class TxTable:
                 "replace_where() requires at least one (col, op, value) "
                 "predicate; for full replacement use overwrite()"
             )
-        pred = None
-        for col, op, val in where:
-            c = _predicate_expr(col, op, val)
-            pred = c if pred is None else (pred & c)
-        keep = ~F.coalesce(pred, F.lit(False))
+        keep = ~F.coalesce(mat.predicates_expr(where), F.lit(False))
         return self._replace(
             df, lambda e: self._file_may_match(e, where), keep, max_retries
         )
@@ -987,42 +948,10 @@ class TxTable:
                 "delete() requires at least one (col, op, value) predicate; "
                 "to empty the table, overwrite() with an empty DataFrame"
             )
-        for attempt in range(max_retries + 1):
-            base = self.current_version()
-            if base == 0:
-                raise NoSuchVersionError(f"{self.path}: table has no commits")
-            m = self._read_manifest(base)
-            schema = StructType.fromJson(m["schema"])
-            touched, carried = [], []
-            for e in m["files"]:
-                (touched if self._file_may_match(e, where) else carried).append(e)
-            if not touched:
-                # stats/bloom prove no row matches: deleting nothing is a
-                # no-op, not a new (identical) version — mirrors compact()
-                return base
-            files = list(carried)
-            rows = sum(e["rows"] for e in carried)
-            if touched:
-                pred = None
-                for col, op, val in where:
-                    c = _predicate_expr(col, op, val)
-                    pred = c if pred is None else (pred & c)
-                kept = (
-                    self.spark.read.schema(schema)
-                    .parquet(*[self._abs(e["path"]) for e in touched])
-                    .filter(~F.coalesce(pred, F.lit(False)))
-                )
-                new_files, new_rows = self._write_data(kept)
-                files += new_files
-                rows += new_rows
-            manifest = self._manifest_for(
-                None, "delete", files, rows, schema=schema
-            )
-            try:
-                return self._commit(manifest, base)
-            except ConcurrentWriteError:
-                if attempt == max_retries:
-                    raise
+        keep = ~F.coalesce(mat.predicates_expr(where), F.lit(False))
+        return self._replace(
+            None, lambda e: self._file_may_match(e, where), keep, max_retries
+        )
 
     def table_changes(self, from_version: int, to_version: int | None = None):
         """Change data feed between two versions: the logical row-level
@@ -1168,20 +1097,6 @@ class TxTable:
                     "stream_append",
                     (m["files"] if m else []) + files,
                     (m["num_rows"] if m else 0) + rows,
-                    schema=self._evolved_schema(batch_df, base),
-                )
-            elif scope_col is None:
-                m = self._read_manifest(base)
-                self._check_append_schema(batch_df, m, allow_evolution=False)
-                current = self.snapshot(base)
-                # left_anti needs no distinct on its right side
-                survivors = current.join(
-                    batch_df.select(*key_cols), on=key_cols, how="left_anti"
-                )
-                merged = survivors.unionByName(batch_df)
-                files, rows = self._write_data(merged)
-                manifest = self._manifest_for(
-                    merged, "stream_merge", files, rows,
                     schema=self._evolved_schema(batch_df, base),
                 )
             else:

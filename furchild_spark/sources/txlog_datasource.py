@@ -535,14 +535,28 @@ def register(spark) -> None:
     bare ``SparkSession.builder``) do not, so the registration helper is
     the one place every consumer of the format must pass through.
 
-    Idempotence is literal: a cloned session (``newSession()``) sees the
-    parent's registration and raises ``DATA_SOURCE_ALREADY_EXISTS`` on
-    re-register (same-session re-registration replaces silently) — the
-    name being present IS the post-condition, so that error is
-    swallowed."""
+    Same-session re-registration replaces silently. A cloned session
+    (``newSession()``) raises ``DATA_SOURCE_ALREADY_EXISTS`` on
+    re-register; that error is swallowed only when ``format("txlog")``
+    then resolves on this session. On Spark 4.1 it does not resolve on a
+    clone (the clone's lookup misses the parent's registration, while
+    registering collides with it), so register() raises a RuntimeError
+    naming that limitation instead of leaving a later read to fail with
+    ``DATA_SOURCE_NOT_FOUND``."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    name = TxLogDataSource.name()
     try:
         spark.dataSource.register(TxLogDataSource)
     except Exception as e:  # AnalysisException; avoid the pyspark import
         if "DATA_SOURCE_ALREADY_EXISTS" not in str(e):
             raise
+        manager = spark._jsparkSession.sessionState().dataSourceManager()
+        if not manager.dataSourceExists(name):
+            raise RuntimeError(
+                f'format("{name}") does not resolve on this session: it is '
+                "a newSession() clone of a session that already registered "
+                "the source, and a clone can neither see nor re-register "
+                "a Python data source of its parent. Read txlog tables on "
+                "the session that registered the source, or through "
+                "TxTable.snapshot()."
+            ) from e

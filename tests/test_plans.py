@@ -18,12 +18,15 @@ from furchild_spark.queries import QUERIES
 SF = "/root/testdata/sf0.001"
 
 
-def plan_of(spark, name: str) -> str:
-    df = QUERIES[name].fn(spark, SF)
+def _formatted(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def plan_of(spark, name: str) -> str:
+    return _formatted(QUERIES[name].fn(spark, SF))
 
 
 @pytest.mark.parametrize(
@@ -354,7 +357,22 @@ def _singlepartition_windows(df):
     return bad
 
 
-def test_catalog_wide_no_singlepartition_windows(spark):
+@pytest.fixture(scope="module")
+def catalog_plans(spark):
+    """Every non-``_e2e`` entry built ONCE for the three catalog-wide
+    lints: name -> (formatted plan, SinglePartition-window findings).
+    Only strings are kept, so no entry's checkpointed data stays pinned
+    after its plan is read."""
+    out = {}
+    for name in QUERIES:
+        if name.endswith("_e2e"):
+            continue
+        df = QUERIES[name].fn(spark, SF)
+        out[name] = (_formatted(df), _singlepartition_windows(df))
+    return out
+
+
+def test_catalog_wide_no_singlepartition_windows(catalog_plans):
     """Catalog-WIDE lint: a Window running on a SinglePartition input
     funnels the whole relation through ONE task — the classic silent
     scale-killer. Allowed only where the windowed relation is provably
@@ -381,11 +399,9 @@ def test_catalog_wide_no_singlepartition_windows(spark):
         # min_frac of the corpus occurrence mass to exist), not by data
         "unigram_tokenize_em",
     }
-    for name in QUERIES:
-        if name.endswith("_e2e") or name in bounded_ok:
+    for name, (_plan, bad) in catalog_plans.items():
+        if name in bounded_ok:
             continue
-        df = QUERIES[name].fn(spark, SF)
-        bad = _singlepartition_windows(df)
         assert not bad, (
             f"{name}: {bad} run on SinglePartition input — single-task "
             "bottleneck at scale (whitelist only with a bounded-"
@@ -393,7 +409,7 @@ def test_catalog_wide_no_singlepartition_windows(spark):
         )
 
 
-def test_catalog_wide_no_cartesian_products(spark):
+def test_catalog_wide_no_cartesian_products(catalog_plans):
     """Catalog-WIDE lint, not a per-entry sample: every entry's physical
     plan is cartesian-free, and nested-loop joins appear only where a
     broadcast of a provably tiny side is the intended design. A new entry
@@ -439,10 +455,7 @@ def test_catalog_wide_no_cartesian_products(spark):
         "ann_sq8_topk",  # 1-row codec + broadcast query codes (ADC serving)
         "bpe_apply",   # 1-row best-pair broadcast inside the embedded trainer
     }
-    for name in QUERIES:
-        if name.endswith("_e2e"):
-            continue
-        p = plan_of(spark, name)
+    for name, (p, _bad) in catalog_plans.items():
         assert "CartesianProduct" not in p, f"{name}: cartesian product"
         if name not in bnlj_ok:
             assert "BroadcastNestedLoopJoin" not in p, f"{name}: unexpected BNLJ"
@@ -610,7 +623,7 @@ def test_bucketed_reuse_both_joins_shuffle_free(spark):
     assert _n_exchanges(p) == 2, f"expected only the two rollup exchanges:\n{p}"
 
 
-def test_catalog_wide_no_python_row_udfs(spark):
+def test_catalog_wide_no_python_row_udfs(catalog_plans):
     """Catalog-WIDE: no entry's plan may contain a Python row UDF
     (BatchEvalPython) or a pandas scalar UDF (ArrowEvalPython). The only
     sanctioned Python path is Arrow mapInPandas (MapInPandas nodes —
@@ -618,10 +631,7 @@ def test_catalog_wide_no_python_row_udfs(spark):
     anything else silently breaks whole-stage codegen for the whole
     stage it lands in. (Write-path *_e2e entries excluded as in the
     cartesian lint.)"""
-    for name in QUERIES:
-        if name.endswith("_e2e"):
-            continue
-        p = plan_of(spark, name)
+    for name, (p, _bad) in catalog_plans.items():
         assert "BatchEvalPython" not in p, f"{name}: Python row UDF"
         assert "ArrowEvalPython" not in p, f"{name}: pandas scalar UDF"
 

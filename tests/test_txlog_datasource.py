@@ -323,6 +323,27 @@ def test_datasource_tables_interop_with_maintenance(
     assert n_files_after < n_files_before
 
 
+def test_register_on_new_session_clone(registered, tx_table):
+    """register() on a spark.newSession() clone, then a format("txlog")
+    read on the clone. Either the read works, or register() itself
+    raises an error that names the newSession() limitation — never a
+    silent registration followed by DATA_SOURCE_NOT_FOUND at read time.
+    On Spark 4.1 a clone cannot resolve its parent's Python data source,
+    so the error branch is the one taken; the parent still reads."""
+    from furchild_spark.sources.txlog_datasource import register
+
+    tx, path, _orders = tx_table
+    clone = registered.newSession()
+    try:
+        register(clone)
+    except RuntimeError as e:
+        assert "newSession()" in str(e)
+        reader = registered
+    else:
+        reader = clone
+    assert reader.read.format("txlog").load(path).count() == tx.count()
+
+
 def test_entries_pass_on_session_without_filter_pushdown_conf(spark, sf_dir):
     """The catalog entries that read format("txlog") must work on a
     session the repo did NOT build (the bench driver constructs its own
