@@ -7,17 +7,23 @@ ROWS ARE FAILURES; a run counts rows — 0 = pass. ``severity='warn'``
 checks report without failing the suite (reference
 tests/stg_addresses_country_len.sql:1 etc.).
 
-At scale each check is one scan (+ one shuffle for unique/relationships);
-checks against the same model share the materialized table, so a full
-suite is bounded by #models scans, not #checks.
+Every built-in check (the generics below and the singular tests) is
+stated once, as a failure condition: a boolean Column, TRUE on a failing
+row. ``run_checks`` folds the conditions of every built-in check on one
+model into a single aggregate of ``count_if`` columns, so the suite is
+one Spark action per model, not per check (+ one shuffle per distinct
+``unique`` key). Relationship checks and opaque callables stay one count
+each.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
+from functools import reduce
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from furchild_spark.functions import shims as S
@@ -27,18 +33,60 @@ from furchild_spark.functions import shims as S
 # generic checks (dbt-core + dbt_utils equivalents)
 # ---------------------------------------------------------------------------
 
-def not_null(df: DataFrame, col: str) -> DataFrame:
-    return df.filter(F.col(col).isNull())
+_FAILED = "__check_failed"
+
+# dbt generic test kind -> row-filter builder (filled by @_builder)
+_GENERIC: dict[str, Callable[..., DataFrame]] = {}
 
 
-def unique(df: DataFrame, col: str) -> DataFrame:
+def _failure_rows(df: DataFrame, condition: Column) -> DataFrame:
+    """The rows of ``df`` on which ``condition`` is TRUE — a NULL result
+    is no failure, like dbt's ``where``. The condition is projected
+    before the filter, so it may hold a window function."""
+    return (
+        df.select("*", condition.alias(_FAILED))
+        .filter(F.col(_FAILED))
+        .drop(_FAILED)
+    )
+
+
+def _builder(condition: Callable[..., Column]) -> Callable[..., DataFrame]:
+    """The dbt row filter ``builder(df, *args) -> failure rows`` of a
+    failure ``condition(*args) -> Column``; run_checks reaches the
+    condition itself through ``builder.condition``."""
+
+    def builder(df: DataFrame, *args) -> DataFrame:
+        return _failure_rows(df, condition(*args))
+
+    builder.__name__ = builder.__qualname__ = condition.__name__
+    builder.__doc__ = condition.__doc__
+    builder.condition = condition
+    _GENERIC[condition.__name__] = builder
+    return builder
+
+
+def _duplicated(cols: list[str]) -> Column:
+    """TRUE on rows whose key occurs more than once and has no NULL part:
+    exactly the rows that grouping by the key and semi-joining the groups
+    with ``count > 1`` back returns (a NULL key never joins)."""
+    n = F.count(F.lit(1)).over(Window.partitionBy(*cols))
+    return reduce(Column.__and__, (F.col(c).isNotNull() for c in cols), n > 1)
+
+
+@_builder
+def not_null(col: str) -> Column:
+    return F.col(col).isNull()
+
+
+@_builder
+def unique(col: str) -> Column:
     """dbt `unique`: rows whose key value occurs more than once
-    (group-having + join back, ref tests/stg_product_brands__unique_brand_id.sql:2-7)."""
-    dupes = df.groupBy(col).count().filter("count > 1").select(col)
-    return df.join(dupes, on=col, how="left_semi")
+    (ref tests/stg_product_brands__unique_brand_id.sql:2-7)."""
+    return _duplicated([col])
 
 
-def accepted_values(df: DataFrame, col: str, values: list) -> DataFrame:
+@_builder
+def accepted_values(col: str, values: list) -> Column:
     """dbt `accepted_values`. When every declared value is numeric (dbt's
     `quote: false` tests, e.g. HAS_VAT in [0, 1], schema.yml:80-83) the
     comparison is NUMERIC like dbt's compiled `NOT IN (0, 1)` — a DOUBLE
@@ -57,7 +105,23 @@ def accepted_values(df: DataFrame, col: str, values: list) -> DataFrame:
         bad = c.isNull() | ~c.isin([float(v) for v in values])
     else:
         bad = ~F.col(col).cast("string").isin([str(v) for v in values])
-    return df.filter(F.col(col).isNotNull() & bad)
+    return F.col(col).isNotNull() & bad
+
+
+@_builder
+def expression_is_true(expression: Column | str) -> Column:
+    """dbt_utils.expression_is_true: rows where the expression evaluates to
+    FALSE. NULL results are NOT failures — dbt compiles the test to
+    ``where not (expr)``, and under three-valued logic ``not (NULL)`` is
+    NULL, which a WHERE clause filters out; ``e == False`` mirrors that
+    exactly."""
+    e = F.expr(expression) if isinstance(expression, str) else expression
+    return e == False  # noqa: E712 — excludes NULL like dbt
+
+
+@_builder
+def unique_combination_of_columns(cols: list[str]) -> Column:
+    return _duplicated(cols)
 
 
 def relationships(df: DataFrame, col: str, to_df: DataFrame, to_col: str) -> DataFrame:
@@ -69,21 +133,6 @@ def relationships(df: DataFrame, col: str, to_df: DataFrame, to_col: str) -> Dat
         df.filter(F.col(col).isNotNull())
         .join(parents, on=col, how="left_anti")
     )
-
-
-def expression_is_true(df: DataFrame, expression: Column | str) -> DataFrame:
-    """dbt_utils.expression_is_true: rows where the expression evaluates to
-    FALSE. NULL results are NOT failures — dbt compiles the test to
-    ``where not (expr)``, and under three-valued logic ``not (NULL)`` is
-    NULL, which a WHERE clause filters out; ``e == False`` mirrors that
-    exactly."""
-    e = F.expr(expression) if isinstance(expression, str) else expression
-    return df.filter(e == False)  # noqa: E712 — excludes NULL like dbt
-
-
-def unique_combination_of_columns(df: DataFrame, cols: list[str]) -> DataFrame:
-    dupes = df.groupBy(*cols).count().filter("count > 1").select(*cols)
-    return df.join(dupes, on=cols, how="left_semi")
 
 
 def source_freshness(
@@ -116,7 +165,10 @@ def source_freshness(
 class Check:
     name: str
     model: str
-    fn: Callable[[DataFrame], DataFrame]  # model df -> failure rows
+    # model df -> failure rows. A built-in check's fn (from _generic or
+    # _singular) also carries ``fn.condition``, which run_checks folds
+    # into its model's one aggregate; any other callable is counted alone.
+    fn: Callable[[DataFrame], DataFrame]
     severity: str = "error"  # dbt default
     extra_model: str | None = None  # for relationship/FK checks
     # dbt warn_if / error_if (conditions on the FAILURE COUNT, e.g.
@@ -150,8 +202,17 @@ def _count_cond(failures: int, cond: str) -> bool:
     }[op]
 
 
+def _singular(condition: Callable[[], Column]) -> Callable[[DataFrame], DataFrame]:
+    """``Check.fn`` of a built-in check with failure ``condition()``. Only
+    this and :func:`_generic` set ``fn.condition``, so a wrapper that
+    copies ``spec`` onto a callable of its own stays opaque."""
+    fn = lambda df: _failure_rows(df, condition())  # noqa: E731
+    fn.condition = condition
+    return fn
+
+
 def _generic(builder, *args):
-    fn = lambda df: builder(df, *args)  # noqa: E731
+    fn = _singular(lambda: builder.condition(*args))
     # machine-readable spec so tests/test_dbt_yaml.py can prove this
     # hand-declared suite ≡ the reference's schema.yml test declarations
     fn.spec = (builder.__name__, *args)
@@ -251,33 +312,33 @@ CHECKS: list[Check] = [
     # ---- singular tests (tests/*.sql, all severity warn) ----
     Check(
         "stg_addresses_country_len", "stg_addresses",
-        lambda df: df.filter(
+        _singular(lambda: (
             F.col("country_code").isNotNull()
             & ~F.length("country_code").isin(2, 3)
-        ),
+        )),
         severity="warn",
     ),
     Check(
         "stg_addresses_email_shape", "stg_addresses",
-        lambda df: df.filter(
+        _singular(lambda: (
             F.col("email").isNotNull() & (F.instr(F.col("email"), "@") <= 1)
-        ),
+        )),
         severity="warn",
     ),
     Check(
         "stg_addresses_latlon_range", "stg_addresses",
-        lambda df: df.filter(
+        _singular(lambda: (
             (F.col("latitude").isNotNull() & ~F.col("latitude").between(-90, 90))
             | (F.col("longitude").isNotNull() & ~F.col("longitude").between(-180, 180))
-        ),
+        )),
         severity="warn",
     ),
     Check(
         "stg_packages_delivered_at_is_date", "stg_packages",
-        lambda df: df.filter(
+        _singular(lambda: (
             F.col("delivered_at").isNotNull()
             & S.try_to_date(F.col("delivered_at").cast("string")).isNull()
-        ),
+        )),
         severity="warn",
     ),
     Check(
@@ -291,26 +352,26 @@ CHECKS: list[Check] = [
     Check("stg_product_details_not_null_product_id", "stg_product_details", _generic(not_null, "product_id"), severity="warn"),
     Check(
         "stg_shipments_delivered_after_shipped", "stg_shipments",
-        lambda df: df.filter(
+        _singular(lambda: (
             F.col("delivered_at").isNotNull()
             & F.col("shipped_at").isNotNull()
             & (F.col("delivered_at") < F.col("shipped_at"))
-        ),
+        )),
         severity="warn",
     ),
     Check(
         "stg_shipments_shipped_at_is_date", "stg_shipments",
-        lambda df: df.filter(
+        _singular(lambda: (
             F.col("shipped_at").isNotNull()
             & S.try_to_date(F.col("shipped_at").cast("string")).isNull()
-        ),
+        )),
         severity="warn",
     ),
     Check(
         "stg_shipments_tracking_number_shape", "stg_shipments",
-        lambda df: df.filter(
+        _singular(lambda: (
             F.col("tracking_number").isNotNull() & (F.length("tracking_number") < 1)
-        ),
+        )),
         severity="warn",
     ),
 ]
@@ -341,26 +402,19 @@ def run_source_checks(
     specs: list[tuple] | None = None,
 ) -> list["CheckResult"]:
     """Execute the source-table test suite against a bronze resolver —
-    dbt tests sources exactly like models (one count per test)."""
-    builders = {
-        "not_null": not_null,
-        "unique": unique,
-        "accepted_values": lambda df, col, vals: accepted_values(
-            df, col, list(vals)
-        ),
-    }
-    out = []
-    for tbl, col, kind, params, severity in (
-        SOURCE_CHECKS if specs is None else specs
-    ):
-        fails = builders[kind](source(tbl), col, *params)
-        out.append(
-            CheckResult(
-                f"source_{tbl}_{col}_{kind}".lower(),
-                f"source:{tbl}", severity, fails.count(),
-            )
+    dbt tests sources exactly like models: the tests are generic checks
+    owned by ``source:<table>``, so run_checks folds them into one
+    aggregate per bronze table."""
+    suite = [
+        Check(
+            f"source_{tbl}_{col}_{kind}".lower(), f"source:{tbl}",
+            _generic(_GENERIC[kind], col, *params), severity,
         )
-    return out
+        for tbl, col, kind, params, severity in (
+            SOURCE_CHECKS if specs is None else specs
+        )
+    ]
+    return run_checks(lambda owner: source(owner.split(":", 1)[1]), suite)
 
 
 @dataclass(frozen=True)
@@ -390,6 +444,20 @@ class CheckResult:
         return self.status != "error"
 
 
+def _fold_counts(df: DataFrame, conditions: list[Column]) -> list[int]:
+    """The number of rows of ``df`` on which each failure condition is
+    TRUE, all from one aggregate — one Spark action however many checks.
+    The conditions are projected first, so each ``unique`` window runs
+    below the aggregate rather than inside it."""
+    flags = [f"_{i}" for i in range(len(conditions))]
+    row = (
+        df.select(*(c.alias(f) for c, f in zip(conditions, flags)))
+        .agg(*(F.count_if(f) for f in flags))
+        .first()
+    )
+    return list(row)
+
+
 def run_checks(
     ref: Callable[[str], DataFrame],
     checks: list[Check] | None = None,
@@ -402,65 +470,91 @@ def run_checks(
     ``models`` restricts to checks attached to those models (dbt's node
     selection: tests run only for selected nodes).
 
-    ``threads`` parallelizes the counts (dbt runs tests on its thread
-    pool too): every check is one independent count job, and on a
-    cluster a serial suite leaves executors idle between the narrow
-    single-check stages. Requires a thread-safe ``ref`` — the Runner's
-    is (per-model locks). Result order matches the suite order
-    regardless of completion order.
+    The built-in checks of one model (those whose ``fn`` carries a
+    ``condition``) are counted together, by one aggregate over
+    ``ref(model)``; every other check — relationships, opaque callables —
+    is one count of its own. ``threads`` runs these per-model and
+    per-check counts on a thread pool (dbt runs tests on its thread pool
+    too); on a cluster a serial suite leaves executors idle between the
+    narrow stages. Requires a thread-safe ``ref`` — the Runner's is
+    (per-model locks). Result order matches the suite order regardless
+    of completion order.
 
     ``store_failures_dir`` is dbt's ``--store-failures``: each check's
-    failure rows are WRITTEN to ``<dir>/<check_name>`` as parquet
-    (dbt's ``dbt_test__audit`` tables), and the count comes from the
-    written table's footers — still one pass over the model per check,
-    and the triage rows are on disk instead of vanishing with the
-    count. A passing check stores an empty table (schema preserved),
-    exactly like dbt."""
+    failure rows are also WRITTEN to ``<dir>/<check_name>`` as parquet
+    (dbt's ``dbt_test__audit`` tables), so the triage rows are on disk
+    instead of vanishing with the count. The counts come from the same
+    per-model aggregates as without it. A passing check stores an empty
+    table (schema preserved), exactly like dbt."""
     suite = [
         c
         for c in (CHECKS if checks is None else checks)
         if models is None or c.model in models
     ]
 
-    def one(c: Check) -> CheckResult:
+    def rows(c: Check) -> DataFrame:
         df = ref(c.model)
         if c.name == "stg_packages_fk_shipment_id_to_shipments":
-            fails = relationships(
+            return relationships(
                 df, "shipment_id", ref(c.extra_model), "shipment_id"
             )
-        elif c.fk_source is not None:
+        if c.fk_source is not None:
             if source is None:
                 raise ValueError(
                     f"check {c.name} is a relationships-to-source test and "
                     "needs run_checks(..., source=<bronze resolver>)"
                 )
             col, tbl, fld = c.fk_source
-            fails = relationships(df, col, source(tbl), fld)
-        else:
-            fails = c.fn(df)
-        if store_failures_dir is not None:
-            import os
+            return relationships(df, col, source(tbl), fld)
+        return c.fn(df)
 
-            path = os.path.join(store_failures_dir, c.name)
-            fails.write.mode("overwrite").parquet(path)
-            failures = fails.sparkSession.read.parquet(path).count()
-            return CheckResult(
-                c.name, c.model, c.severity, failures, path,
-                warn_if=c.warn_if, error_if=c.error_if,
-            )
-        return CheckResult(
-            c.name, c.model, c.severity, fails.count(),
-            warn_if=c.warn_if, error_if=c.error_if,
+    def path(c: Check) -> str | None:
+        if store_failures_dir is None:
+            return None
+        return os.path.join(store_failures_dir, c.name)
+
+    def folds(c: Check) -> bool:
+        return hasattr(c.fn, "condition")
+
+    # suite positions per unit of work: one unit per model with built-in
+    # checks, one per other check, in order of first appearance
+    units: dict[tuple, list[int]] = {}
+    for i, c in enumerate(suite):
+        key = ("model", c.model) if folds(c) else ("check", i)
+        units.setdefault(key, []).append(i)
+
+    def count(unit: list[int]) -> list[int]:
+        batch = [suite[i] for i in unit]
+        if store_failures_dir is not None:
+            for c in batch:
+                rows(c).write.mode("overwrite").parquet(path(c))
+        if not folds(batch[0]):
+            return [rows(batch[0]).count()]
+        return _fold_counts(
+            ref(batch[0].model), [c.fn.condition() for c in batch]
         )
 
-    if threads <= 1 or len(suite) <= 1:
-        return [one(c) for c in suite]
-    from concurrent.futures import ThreadPoolExecutor
+    if threads <= 1 or len(units) <= 1:
+        counted = [count(u) for u in units.values()]
+    else:
+        from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(
-        max_workers=threads, thread_name_prefix="checks"
-    ) as pool:
-        return list(pool.map(one, suite))
+        with ThreadPoolExecutor(
+            max_workers=threads, thread_name_prefix="checks"
+        ) as pool:
+            counted = list(pool.map(count, units.values()))
+    failures = {
+        i: n
+        for unit, got in zip(units.values(), counted)
+        for i, n in zip(unit, got)
+    }
+    return [
+        CheckResult(
+            c.name, c.model, c.severity, failures[i], path(c),
+            warn_if=c.warn_if, error_if=c.error_if,
+        )
+        for i, c in enumerate(suite)
+    ]
 
 
 # ---------------------------------------------------------------------------

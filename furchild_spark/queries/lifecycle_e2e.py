@@ -186,10 +186,11 @@ def store_failures_e2e(spark, sf_dir):
     """An accepted_values check that genuinely fails on the shared data
     (status 'P' is outside the accepted set), run with
     ``store_failures_dir`` set: run_checks writes the failure rows as
-    parquet under ``<dir>/<check_name>`` and counts from the written
-    footers (one pass). The returned DataFrame reads that AUDIT TABLE
-    off disk — the driver hash proves the stored rows are exactly the
-    check's failure set, not a re-computation."""
+    parquet under ``<dir>/<check_name>`` next to counting them (an
+    opaque callable like this one is its own count). The returned
+    DataFrame reads that AUDIT TABLE off disk — the oracle hash proves
+    the stored rows are exactly the check's failure set, not a
+    re-computation."""
     from furchild_spark.engine import checks as C
     from furchild_spark.engine.registry import ModelRegistry, Runner
 

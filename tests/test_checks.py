@@ -53,6 +53,39 @@ def test_generic_builders_detect_seeded_violations(spark):
     assert C.relationships(df, "id", parents, "id").count() == 1  # id=2 orphan
     assert C.unique_combination_of_columns(df, ["k", "v"]).count() == 0
 
+    # one frame violating every built-in kind, edge cases included: NULL
+    # keys never duplicate (NaN and -0.0 do), a NULL expression result is
+    # no failure, accepted_values compares numerically when declared so.
+    # run_checks folds these into one aggregate; each count must be exactly
+    # the rows the check's own fn returns.
+    edge = spark.createDataFrame(
+        [
+            (1, "x", 1, 5, "0", float("nan")),
+            (1, "x", 1, -1, "01", float("nan")),
+            (None, "x", None, None, "true", 0.0),
+            (None, "x", None, 2, None, -0.0),
+            (2, "y", 2, 0, "2", None),
+            (3, None, 2, -3, "1.0", None),
+        ],
+        "id long, a string, b long, v long, s string, d double",
+    )
+    suite = [
+        C.Check("id_not_null", "m", C._generic(C.not_null, "id")),
+        C.Check("id_unique", "m", C._generic(C.unique, "id")),
+        C.Check("d_unique", "m", C._generic(C.unique, "d")),
+        C.Check("ab_unique", "m", C._generic(C.unique_combination_of_columns, ["a", "b"])),
+        C.Check("v_nonneg", "m", C._generic(C.expression_is_true, "v >= 0")),
+        C.Check("s_in_0_1", "m", C._generic(C.accepted_values, "s", [0, 1])),
+        C.Check("a_in_x", "m", C._generic(C.accepted_values, "a", ["x"])),
+        C.Check("b_le_1", "m", C._singular(lambda: F.col("b") > 1)),
+        C.Check("id_not_3", "m", lambda d: d.filter(F.col("id") == 3)),
+    ]
+    got = C.run_checks(lambda n: edge, suite)
+    assert [(r.name, r.failures) for r in got] == [
+        (c.name, c.fn(edge).count()) for c in suite
+    ]
+    assert [r.failures for r in got] == [2, 2, 4, 2, 2, 2, 1, 2, 1]
+
 
 def test_accepted_values_numeric_and_null_semantics(spark):
     """r10 ADVICE: numeric declarations compare NUMERICALLY like dbt's
@@ -201,6 +234,29 @@ def test_run_checks_threaded_matches_serial(runner):
     assert [(r.name, r.failures) for r in serial] == [
         (r.name, r.failures) for r in threaded
     ]
+
+
+def test_run_checks_one_query_per_model(spark, runner):
+    """The suite costs one SQL execution per model with built-in checks
+    plus one per other check (the two relationship checks), not one per
+    check. Counted in the SQL status store, which sees actions, not the
+    jobs AQE splits them into."""
+    C.run_checks(runner.ref, source=runner.source)  # materialize the models
+    store = spark._jsparkSession.sharedState().statusStore()
+    listeners = spark.sparkContext._jsc.sc().listenerBus()
+
+    def execution_ids():
+        listeners.waitUntilEmpty()
+        recent = store.executionsList(max(0, store.executionsCount() - 500), 500)
+        return [recent.apply(i).executionId() for i in range(recent.size())]
+
+    last = max(execution_ids(), default=-1)
+    C.run_checks(runner.ref, source=runner.source)
+    started = [i for i in execution_ids() if i > last]
+    relationships = [c for c in C.CHECKS if c.fn is None]
+    models = {c.model for c in C.CHECKS if c.fn is not None}
+    assert (len(models), len(relationships), len(C.CHECKS)) == (22, 2, 86)
+    assert len(started) == len(models) + len(relationships)
 
 
 def test_warn_if_error_if_threshold_ladder(spark):
