@@ -284,16 +284,82 @@ def _included_names(args, spark=None, _cache=None) -> list[str] | None:
     return _expand_token_list(args, spark, args.models.split(","), _cache)
 
 
+def _match_group(reg, gname, t, at, trail) -> list[str]:
+    """dbt 1.5 group selectors: group:NAME = every model owned by the
+    group."""
+    hits = [n for n in reg.names() if reg[n].group == gname]
+    if not hits:
+        _usage_error(
+            f"group:{gname!r} matches no models (declared groups: "
+            f"{sorted({reg[n].group for n in reg.names() if reg[n].group})})"
+        )
+    return hits
+
+
+def _match_tag(reg, tag, t, at, trail) -> list[str]:
+    """dbt tag selectors: tag:NAME = every model carrying the tag."""
+    if at and trail:
+        _usage_error(f"{t!r}: '@' already selects descendants — "
+                     "use @tag:NAME or tag:NAME+")
+    hits = [n for n in reg.names() if tag in reg[n].tags]
+    if not hits:
+        _usage_error(f"tag:{tag!r} matches no models (declared "
+                     "tags: "
+                     f"{sorted({x for n in reg.names() for x in reg[n].tags})})")
+    return hits
+
+
+def _match_version(reg, which, t, at, trail) -> list[str]:
+    """dbt 1.5 version selectors: version:latest / version:old /
+    version:prerelease (versions above the declared latest) /
+    version:none (unversioned models)."""
+    if which not in ("latest", "old", "prerelease", "none"):
+        core = f"version:{which}"
+        _usage_error(
+            f"unknown version selector: {core!r} (supported: "
+            "version:latest/old/prerelease/none)"
+        )
+    hits = []
+    for n in reg.names():
+        m = reg[n]
+        if m.version is None:
+            if which == "none":
+                hits.append(n)
+            continue
+        latest = reg.latest_version(m.base_name)
+        if (
+            (which == "latest" and m.version == latest)
+            or (which == "old" and m.version < latest)
+            or (which == "prerelease" and m.version > latest)
+        ):
+            hits.append(n)
+    if not hits:
+        _usage_error(f"version:{which!r} matches no models")
+    return hits
+
+
+# model-set selector methods, expanded in this order; the graph operators
+# compose with each (+METHOD:V = the ancestor cones, METHOD:V+ = the
+# descendant cones, @METHOD:V = the descendants and their ancestors).
+# Each matcher gets (registry, value, token, "@" or "", "+" or "") and
+# returns the matching models or exits with a usage error.
+_SELECTOR_METHODS = {
+    "group": _match_group,
+    "tag": _match_tag,
+    "version": _match_version,
+}
+
+
 def _expand_token_list(args, spark, toks, _cache=None) -> list[str]:
     """Expand one comma-free token LIST through the full selector
     grammar (graph operators, @, tag:, exposure:, state:, result:) —
     the shared engine behind --models and named YAML selectors."""
+    from furchild_spark.models import registry as _reg
+
     if any("exposure:" in t for t in toks):
         # dbt exposure selectors: exposure:NAME = the exposure's direct
         # dependencies; +exposure:NAME = their full ancestor cones. An
         # exposure has no descendants, so a trailing + is an error.
-        from furchild_spark.models import registry as _reg
-
         exposures = _reg.exposures()
         expanded = []
         for t in toks:
@@ -314,102 +380,25 @@ def _expand_token_list(args, spark, toks, _cache=None) -> list[str]:
             pre = at or ("+" if t.startswith("+") else "")
             expanded.extend(pre + d for d in exposures[ename].depends_on)
         toks = expanded
-    if any("group:" in t for t in toks):
-        # dbt 1.5 group selectors: group:NAME = every model owned by the
-        # group; graph operators compose like tag:
-        from furchild_spark.models import registry as _reg
-
+    for method, match in _SELECTOR_METHODS.items():
+        if not any(f"{method}:" in t for t in toks):
+            continue
         expanded = []
         for t in toks:
             at = "@" if t.startswith("@") else ""
             core = t.removeprefix("@").removeprefix("+")
             trail = "+" if core.endswith("+") else ""
             core = core.removesuffix("+")
-            if not core.startswith("group:"):
+            if not core.startswith(f"{method}:"):
                 expanded.append(t)
                 continue
-            gname = core.removeprefix("group:")
-            hits = [n for n in _reg.names() if _reg[n].group == gname]
-            if not hits:
-                _usage_error(
-                    f"group:{gname!r} matches no models (declared groups: "
-                    f"{sorted({_reg[n].group for n in _reg.names() if _reg[n].group})})"
-                )
-            pre = at or ("+" if t.startswith("+") else "")
-            expanded.extend(pre + h + trail for h in hits)
-        toks = expanded
-    if any("tag:" in t for t in toks):
-        # dbt tag selectors: tag:NAME = every model carrying the tag;
-        # graph operators compose (+tag:NAME = their ancestor cones,
-        # tag:NAME+ = their descendant cones)
-        from furchild_spark.models import registry as _reg
-
-        expanded = []
-        for t in toks:
-            at = "@" if t.startswith("@") else ""
-            core = t.removeprefix("@").removeprefix("+")
-            trail = "+" if core.endswith("+") else ""
-            core = core.removesuffix("+")
-            if not core.startswith("tag:"):
-                expanded.append(t)
-                continue
-            if at and trail:
-                _usage_error(f"{t!r}: '@' already selects descendants — "
-                             "use @tag:NAME or tag:NAME+")
-            tag = core.removeprefix("tag:")
-            hits = [n for n in _reg.names() if tag in _reg[n].tags]
-            if not hits:
-                _usage_error(f"tag:{tag!r} matches no models (declared "
-                             "tags: "
-                             f"{sorted({x for n in _reg.names() for x in _reg[n].tags})})")
-            pre = at or ("+" if t.startswith("+") else "")
-            expanded.extend(pre + h + trail for h in hits)
-        toks = expanded
-    if any("version:" in t for t in toks):
-        # dbt 1.5 version selectors: version:latest / version:old /
-        # version:prerelease (versions above the declared latest) /
-        # version:none (unversioned models); graph operators compose
-        from furchild_spark.models import registry as _reg
-
-        expanded = []
-        for t in toks:
-            at = "@" if t.startswith("@") else ""
-            core = t.removeprefix("@").removeprefix("+")
-            trail = "+" if core.endswith("+") else ""
-            core = core.removesuffix("+")
-            if not core.startswith("version:"):
-                expanded.append(t)
-                continue
-            which = core.removeprefix("version:")
-            if which not in ("latest", "old", "prerelease", "none"):
-                _usage_error(
-                    f"unknown version selector: {core!r} (supported: "
-                    "version:latest/old/prerelease/none)"
-                )
-            hits = []
-            for n in _reg.names():
-                m = _reg[n]
-                if m.version is None:
-                    if which == "none":
-                        hits.append(n)
-                    continue
-                latest = _reg.latest_version(m.base_name)
-                if (
-                    (which == "latest" and m.version == latest)
-                    or (which == "old" and m.version < latest)
-                    or (which == "prerelease" and m.version > latest)
-                ):
-                    hits.append(n)
-            if not hits:
-                _usage_error(f"version:{which!r} matches no models")
+            hits = match(_reg, core.removeprefix(f"{method}:"), t, at, trail)
             pre = at or ("+" if t.startswith("+") else "")
             expanded.extend(pre + h + trail for h in hits)
         toks = expanded
     # dbt selection alias model.vN -> the node name model_vN
-    from furchild_spark.models import registry as _vreg
-
     toks = [
-        t if t in _vreg.names() else re.sub(
+        t if t in _reg.names() else re.sub(
             r"^([@+]*)([A-Za-z0-9_]+)\.v(\d+)(\+?)$", r"\1\2_v\3\4", t
         )
         for t in toks
@@ -425,9 +414,7 @@ def _expand_token_list(args, spark, toks, _cache=None) -> list[str]:
     ):
         return graph_toks
 
-    from furchild_spark.models import registry
-
-    known = set(registry.names())
+    known = set(_reg.names())
     parsed = _parse_graph_tokens(graph_toks, known, "--models", allow_at=True)
     for t in state_toks:
         if t not in ("state:modified", "state:modified+"):
@@ -460,34 +447,14 @@ def _expand_token_list(args, spark, toks, _cache=None) -> list[str]:
     lineage, order, probe = _observed_lineage(args, spark, roots=roots)
     if _cache is not None and roots is None:
         _cache["full"] = (lineage, order, probe)
-    parents = {n: set(lineage.get(n, {}).get("refs", [])) for n in order}
-    children: dict[str, set] = {n: set() for n in order}
-    for n, ps in parents.items():
-        for pnt in ps:
-            children.setdefault(pnt, set()).add(n)
 
-    def closure(start: str, edges: dict) -> set:
-        seen, stack = set(), [start]
-        while stack:
-            x = stack.pop()
-            if x in seen:
-                continue
-            seen.add(x)
-            stack.extend(edges.get(x, ()))
-        return seen
+    def cones(names, down: bool) -> set:
+        # names, plus their descendant cones when the selector ends in +
+        return _expand_graph(
+            [(n, False, down, False) for n in names], lineage, order
+        )
 
-    selected: set = set()
-    for name, up, down, at in parsed:
-        selected.add(name)
-        if up:
-            selected |= closure(name, parents)
-        if down:
-            selected |= closure(name, children)
-        if at:
-            desc = closure(name, children)
-            selected |= desc
-            for d in desc:
-                selected |= closure(d, parents)
+    selected = _expand_graph(parsed, lineage, order)
     if state_toks:
         from furchild_spark.engine import state as ST
 
@@ -496,10 +463,7 @@ def _expand_token_list(args, spark, toks, _cache=None) -> list[str]:
         # second plan pass, no Spark action
         current = ST.build_manifest(probe)
         mods = ST.modified_models(prior, current)
-        selected |= set(mods)
-        if any(t.endswith("+") for t in state_toks):
-            for m in mods:
-                selected |= closure(m, children)
+        selected |= cones(mods, any(t.endswith("+") for t in state_toks))
     if result_toks:
         with open(args.state_results) as fh:
             prior_results = json.load(fh).get("results", {})
@@ -509,10 +473,7 @@ def _expand_token_list(args, spark, toks, _cache=None) -> list[str]:
                 n for n, r in prior_results.items()
                 if r.get("status") == status and n in known
             ]
-            selected |= set(matched)
-            if t.endswith("+"):
-                for m in matched:
-                    selected |= closure(m, children)
+            selected |= cones(matched, t.endswith("+"))
     return [n for n in order if n in selected]
 
 

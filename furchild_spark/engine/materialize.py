@@ -209,15 +209,20 @@ def _swap_in(spark: SparkSession, path: str, staged_suffix: str = "__staged") ->
     fs.delete(old, True)
 
 
-def _stage_and_swap(spark: SparkSession, path: str, df: DataFrame) -> None:
-    """Write ``df`` to ``path__staged`` and promote it with
-    :func:`_swap_in`. A staged dir already there is a crashed write's
-    leftover, never the live copy, so it is cleared first."""
+def _stage(spark: SparkSession, path: str, df: DataFrame) -> None:
+    """Write ``df`` to ``path__staged``. A staged dir already there is a
+    crashed write's leftover, never the live copy, so it is cleared
+    first."""
     fs, jvm = _fs(spark, path)
     staged = _hpath(jvm, path + "__staged")
     if fs.exists(staged):
         fs.delete(staged, True)
     df.write.mode("overwrite").parquet(path + "__staged")
+
+
+def _stage_and_swap(spark: SparkSession, path: str, df: DataFrame) -> None:
+    """:func:`_stage` ``df``, then promote it with :func:`_swap_in`."""
+    _stage(spark, path, df)
     _swap_in(spark, path)
 
 

@@ -26,6 +26,8 @@ candidate buckets; IVF probes only nprobe inverted lists.
 from __future__ import annotations
 
 import random
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -293,7 +295,7 @@ def ivf_assign(
         .join(F.broadcast(centroids), on="__one")
         .withColumn("cent_id", -best["negcid"])
         # cent_sim rides along for the maintained-index drift monitor
-        # (ivf_index_drift); downstream joins project it away for free
+        # (ivf_flat_codec); downstream joins project it away for free
         .withColumn("cent_sim", best["sim"])
         .select("cent_id", "neighbor_id", "c_q", "c_norm", "cent_sim")
     )
@@ -335,7 +337,7 @@ def ivf_probe_topk(
     nprobe: int = 2,
 ) -> DataFrame:
     """The serving half of :func:`ivf_topk`, factored out so a MAINTAINED
-    index (:func:`ivf_index_search` reading persisted lists) and the
+    index (:func:`index_search` reading persisted lists) and the
     inline build share one probe implementation byte-for-byte."""
     qb = queries.select(
         F.col(id_col).alias("query_id"), quantize(vec_col).alias("q_q")
@@ -965,18 +967,54 @@ def ivfpq_train(
     per corpus instead of re-training per query plan (bench warmth is
     then deterministic, not sweep-order-dependent)."""
     cents = centroid_array(corpus, id_col, vec_col, num_centroids)
-    assign = ivf_assign(corpus, cents, id_col, vec_col)
-    cent_rows = cents.select(F.explode("__cents").alias("c")).select(
-        F.col("c.cid").alias("cent_id"), F.col("c.cq").alias("cent_cq")
-    )
-    resid = assign.join(F.broadcast(cent_rows), on="cent_id").select(
-        "cent_id",
-        "neighbor_id",
-        F.zip_with("c_q", "cent_cq", lambda a, b: a - b).alias("r_q"),
+    resid = _residual(
+        ivf_assign(corpus, cents, id_col, vec_col), cents, "c_q", "r_q",
+        "cent_id", "neighbor_id",
     )
     return pq_train(
         resid, "neighbor_id", "r_q", dim, subspaces, kcodes,
         iters=1, pre_quantized=True,
+    )
+
+
+def _residual(df: DataFrame, cents: DataFrame, q_col: str, out_col: str,
+              *keep: str) -> DataFrame:
+    """The IVF-PQ residual step: join each row's ``cent_id`` to its coarse
+    centroid in the broadcast one-row array and subtract in the quantized
+    long domain (``out_col = q_col − centroid``, elementwise). Training
+    and encoding run it on corpus rows, serving on each probed query."""
+    cent_rows = cents.select(F.explode("__cents").alias("c")).select(
+        F.col("c.cid").alias("cent_id"), F.col("c.cq").alias("cent_cq")
+    )
+    return df.join(F.broadcast(cent_rows), on="cent_id").select(
+        *keep, F.zip_with(q_col, "cent_cq", lambda a, b: a - b).alias(out_col),
+    )
+
+
+def _ivfpq_encode(
+    df: DataFrame,
+    cents: DataFrame,
+    cb: list,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    subspaces: int,
+    kcodes: int,
+) -> DataFrame:
+    """Coarse-assign, take the residual and PQ-encode ``df`` against the
+    given centroids and codebook — map-only. Returns (cent_id,
+    neighbor_id, cent_sim, codes), the codes table of a maintained
+    IVF-PQ index and the candidate side of :func:`ivfpq_serve`."""
+    resid = _residual(
+        ivf_assign(df, cents, id_col, vec_col), cents, "c_q", "r_q",
+        "cent_id", "neighbor_id", "cent_sim",
+    )
+    codes = pq_encode(
+        resid, "neighbor_id", "r_q", dim, subspaces, kcodes,
+        codebook=cb, pre_quantized=True,
+    ).withColumnRenamed("vec_id", "neighbor_id")
+    return resid.select("cent_id", "neighbor_id", "cent_sim").join(
+        codes, on="neighbor_id"
     )
 
 
@@ -1018,26 +1056,13 @@ def ivfpq_topk(
     the re-rank pattern of pq_topk_reranked composes on top unchanged.
     At 100 TB, train on a sample: the loop is O(iters · scan) and only
     the k×subspaces centroid table reaches the driver."""
-    sub = dim // subspaces
     cents = centroid_array(corpus, id_col, vec_col, num_centroids)
-    assign = ivf_assign(corpus, cents, id_col, vec_col)
-    cent_rows = cents.select(F.explode("__cents").alias("c")).select(
-        F.col("c.cid").alias("cent_id"), F.col("c.cq").alias("cent_cq")
+    cb = codebook if codebook is not None else ivfpq_train(
+        corpus, id_col, vec_col, num_centroids, dim, subspaces, kcodes
     )
-    resid = assign.join(F.broadcast(cent_rows), on="cent_id").select(
-        "cent_id",
-        "neighbor_id",
-        F.zip_with("c_q", "cent_cq", lambda a, b: a - b).alias("r_q"),
+    coded = _ivfpq_encode(
+        corpus, cents, cb, id_col, vec_col, dim, subspaces, kcodes
     )
-    cb = codebook if codebook is not None else pq_train(
-        resid, "neighbor_id", "r_q", dim, subspaces, kcodes,
-        iters=1, pre_quantized=True,
-    )
-    codes = pq_encode(
-        resid, "neighbor_id", "r_q", dim, subspaces, kcodes,
-        codebook=cb, pre_quantized=True,
-    ).withColumnRenamed("vec_id", "neighbor_id")
-    coded = resid.select("cent_id", "neighbor_id").join(codes, on="neighbor_id")
     return ivfpq_serve(
         coded, cents, queries, cb, id_col, vec_col,
         k=k, nprobe=nprobe, dim=dim, subspaces=subspaces, kcodes=kcodes,
@@ -1059,12 +1084,9 @@ def ivfpq_serve(
 ) -> DataFrame:
     """The SERVE half of :func:`ivfpq_topk` — probe + ADC over an
     existing (cent_id, codes) table against a given codebook — factored
-    out so a MAINTAINED index (:func:`ivfpq_index_search`) and the
+    out so a MAINTAINED index (:func:`index_search`) and the
     inline build share one plan byte-for-byte."""
     sub = dim // subspaces
-    cent_rows = cents.select(F.explode("__cents").alias("c")).select(
-        F.col("c.cid").alias("cent_id"), F.col("c.cq").alias("cent_cq")
-    )
 
     # query side: nprobe nearest coarse lists (same in-row argsort as
     # ivf_topk), then the query residual PER PROBED LIST
@@ -1084,17 +1106,12 @@ def ivfpq_serve(
         1,
         nprobe,
     )
-    probes = (
+    probes = _residual(
         qb.withColumn("__one", F.lit(1))
         .join(F.broadcast(cents), on="__one")
         .select("query_id", "q_q", F.explode(probe_arr).alias("__p"))
-        .select(F.col("__p.cid").alias("cent_id"), "query_id", "q_q")
-        .join(F.broadcast(cent_rows), on="cent_id")
-        .select(
-            "cent_id",
-            "query_id",
-            F.zip_with("q_q", "cent_cq", lambda a, b: a - b).alias("qr"),
-        )
+        .select(F.col("__p.cid").alias("cent_id"), "query_id", "q_q"),
+        cents, "q_q", "qr", "cent_id", "query_id",
     )
 
     # ADC: in-row fold over the 32 subspaces — candidate join on the
@@ -1193,7 +1210,22 @@ def sq8_encode(
         clamped = F.greatest(F.lit(0.0), F.least(F.lit(255.0), scaled))
         return clamped.cast("int")
 
-    zipped = F.zip_with(
+    return (
+        fanout(corpus)
+        .withColumn("__one", F.lit(1))
+        .join(F.broadcast(codec), on="__one")
+        .select(
+            F.col(id_col),
+            F.transform(_with_rails(vec_col), code).alias("codes"),
+        )
+    )
+
+
+def _with_rails(vec_col: str):
+    """Each quantized component of ``vec_col`` beside its codec rails:
+    ``array<struct(q, mn, mx)>``, on a row joined to the 1-row codec
+    (``mins``/``maxs``)."""
+    return F.zip_with(
         F.zip_with(
             quantize(vec_col), F.col("mins"),
             lambda q, mn: F.struct(q.alias("q"), mn.alias("mn")),
@@ -1202,15 +1234,6 @@ def sq8_encode(
         lambda s, mx: F.struct(
             s["q"].alias("q"), s["mn"].alias("mn"), mx.alias("mx")
         ),
-    )
-    return (
-        fanout(corpus)
-        .withColumn("__one", F.lit(1))
-        .join(F.broadcast(codec), on="__one")
-        .select(
-            F.col(id_col),
-            F.transform(zipped, code).alias("codes"),
-        )
     )
 
 
@@ -1286,7 +1309,7 @@ def sq8_serve(
 ) -> DataFrame:
     """The SERVE half of :func:`sq8_topk` — ADC over existing
     (id, codes) tables against a given 1-row codec — factored out so a
-    MAINTAINED index (:func:`sq8_index_search`) and the inline build
+    MAINTAINED index (:func:`index_search`) and the inline build
     share one plan byte-for-byte."""
     c = (
         coded_corpus
@@ -1808,116 +1831,69 @@ def remove_top_direction_report(
 
 
 # ---------------------------------------------------------------------------
-# maintained IVF index: build once, append batches, search — FAISS add()
+# maintained vector index: one FAISS-style train-once/add-many lifecycle
+# (build, append, search, retrain, drift) over three codecs
 # ---------------------------------------------------------------------------
 
-def ivf_index_build(
-    spark,
-    corpus: DataFrame,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_centroids: int = 8,
-) -> None:
-    """Materialize an IVF index as two tables: ``<path>__centroids`` (the
-    one-row frozen centroid array) and ``<path>__lists`` (the inverted
-    lists: cent_id, neighbor_id, quantized vector, norm, cent_sim).
+@dataclass(frozen=True)
+class IndexCodec:
+    """One ANN family as a maintained-index codec. An index at ``path``
+    is the frozen artifact tables ``path + s`` for ``s`` in ``artifacts``
+    (in commit order) plus the codes table ``path + codes`` that every
+    append grows. The lifecycle functions below call four steps, where
+    ``arts`` is ``{suffix: DataFrame}`` of the artifacts as READ BACK
+    from disk, so every encode and search runs against the persisted
+    copy:
 
-    The mirror of ``semdedup_incremental``'s shared-artifact pattern and
-    FAISS's train-once/add-many contract: training (centroid choice) is
-    paid ONCE; every later batch assigns against the FROZEN artifact.
-    """
-    from furchild_spark.engine import materialize as mat
+    - ``train(spark, corpus, id_col, vec_col) -> {suffix: DataFrame}``
+    - ``encode(df, arts, id_col, vec_col) -> codes rows``
+    - ``search(codes, arts, queries, id_col, vec_col, k, nprobe)``
+    - ``flag(batch, arts, id_col, vec_col)`` -> one boolean ``__flag``
+      per batch row for :func:`index_drift`; None = no drift monitor.
 
-    cents = centroid_array(corpus, id_col, vec_col, num_centroids)
-    frozen = mat.overwrite(spark, f"{index_path}__centroids", cents)
-    mat.overwrite(
-        spark, f"{index_path}__lists",
-        ivf_assign(corpus, frozen, id_col, vec_col),
-        return_table=False,
-    )
+    Build with :func:`ivf_flat_codec`, :func:`ivfpq_codec` or
+    :func:`sq8_codec`."""
 
-
-def ivf_index_append(
-    spark,
-    batch: DataFrame,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """FAISS ``add()``: assign ONLY the batch against the frozen
-    centroids and append to the inverted lists — O(batch) map-only work
-    plus one append; the existing corpus is never re-read, re-assigned,
-    or re-encoded. Returns the batch's assignment (for drift checks)."""
-    from furchild_spark.engine import materialize as mat
-
-    frozen = mat.read_table(spark, f"{index_path}__centroids")
-    assign = ivf_assign(batch, frozen, id_col, vec_col).localCheckpoint()
-    mat.append_rows(spark, f"{index_path}__lists", assign, return_table=False)
-    return assign
+    artifacts: tuple
+    codes: str
+    train: Callable
+    encode: Callable
+    search: Callable
+    flag: Callable | None = None
 
 
-def ivf_index_search(
-    spark,
-    queries: DataFrame,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nprobe: int = 2,
-) -> DataFrame:
-    """Probe the MAINTAINED lists — identical serving plan to
-    :func:`ivf_topk` (shared :func:`ivf_probe_topk`), but the corpus side
-    is the persisted index, so a search after N appends never recomputes
-    assignment."""
-    from furchild_spark.engine import materialize as mat
+def ivf_flat_codec(num_centroids: int = 8, min_sim: float = 0.5) -> IndexCodec:
+    """IVF-flat: artifact ``__centroids`` (the one-row frozen centroid
+    array), codes ``__lists`` (the inverted lists: cent_id, neighbor_id,
+    quantized vector, norm, cent_sim). Search is :func:`ivf_topk`'s probe
+    plan (:func:`ivf_probe_topk`). Drift flags a batch row whose
+    best-centroid cosine falls below ``min_sim`` — the frozen centroids
+    have stopped describing the data (the known failure mode of FAISS
+    add-without-retrain)."""
+    def flag(batch, arts, id_col, vec_col):
+        return ivf_assign(batch, arts["__centroids"], id_col, vec_col).select(
+            (F.col("cent_sim") < F.lit(min_sim)).alias("__flag")
+        )
 
-    cents = mat.read_table(spark, f"{index_path}__centroids")
-    lists = mat.read_table(spark, f"{index_path}__lists")
-    return ivf_probe_topk(lists, cents, queries, id_col, vec_col, k, nprobe)
-
-
-def ivf_index_drift(
-    batch_assign: DataFrame,
-    min_sim: float = 0.5,
-    max_low_frac: float = 0.2,
-) -> DataFrame:
-    """Drift-triggered retrain hook: a frozen centroid set slowly stops
-    describing the data as the distribution moves (the known failure mode
-    of FAISS add-without-retrain). The statistic: the fraction of the
-    batch whose best-centroid cosine falls below ``min_sim``. One map-side
-    aggregate over the batch assignment — rounded sims and integer
-    counts, so an oracle replays the decision exactly.
-
-    Returns one row: (n_batch, n_low, low_frac, needs_retrain). An EMPTY
-    batch deterministically reports no drift (0/0.0/false), never a
-    three-valued NULL a caller's boolean gate would silently skip."""
-    return batch_assign.agg(
-        F.count(F.lit(1)).cast("long").alias("n_batch"),
-        F.coalesce(
-            F.sum((F.col("cent_sim") < F.lit(min_sim)).cast("long")),
-            F.lit(0),
-        ).cast("long").alias("n_low"),
-    ).select(
-        "n_batch", "n_low",
-        F.when(
-            F.col("n_batch") > 0,
-            F.round(
-                F.col("n_low").cast("double")
-                / F.col("n_batch").cast("double"), 6,
+    return IndexCodec(
+        artifacts=("__centroids",),
+        codes="__lists",
+        train=lambda spark, corpus, id_col, vec_col: {
+            "__centroids": centroid_array(
+                corpus, id_col, vec_col, num_centroids
             ),
-        ).otherwise(F.lit(0.0)).alias("low_frac"),
-        F.when(
-            F.col("n_batch") > 0,
-            F.col("n_low").cast("double")
-            > F.col("n_batch").cast("double") * F.lit(max_low_frac),
-        ).otherwise(F.lit(False)).alias("needs_retrain"),
+        },
+        encode=lambda df, arts, id_col, vec_col: ivf_assign(
+            df, arts["__centroids"], id_col, vec_col
+        ),
+        search=lambda codes, arts, queries, id_col, vec_col, k, nprobe:
+            ivf_probe_topk(
+                codes, arts["__centroids"], queries, id_col, vec_col, k,
+                nprobe,
+            ),
+        flag=flag,
     )
 
-
-# ---------------------------------------------------------------------------
-# maintained IVF-PQ index: frozen centroids + frozen codebook + codes table
-# ---------------------------------------------------------------------------
 
 def _codebook_table(spark, cb: list):
     rows = [
@@ -1927,13 +1903,11 @@ def _codebook_table(spark, cb: list):
     return spark.createDataFrame(rows, "m int, c int, cent array<long>")
 
 
-def _read_codebook(spark, path: str) -> list:
-    """Rehydrate the persisted codebook table into the driver-side list
+def _codebook_list(table: DataFrame) -> list:
+    """Rehydrate a persisted codebook table into the driver-side list
     shape pq_encode/ivfpq_serve take — bounded at subspaces×kcodes rows
     (the FAISS index-file analog)."""
-    from furchild_spark.engine import materialize as mat
-
-    rows = mat.read_table(spark, path).collect()
+    rows = table.collect()
     subspaces = 1 + max(r["m"] for r in rows)
     kcodes = 1 + max(r["c"] for r in rows)
     cb = [[None] * kcodes for _ in range(subspaces)]
@@ -1942,349 +1916,247 @@ def _read_codebook(spark, path: str) -> list:
     return cb
 
 
-def _ivfpq_encode_against(
-    df: DataFrame,
-    frozen_cents: DataFrame,
-    cb: list,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    subspaces: int,
-    kcodes: int,
-) -> DataFrame:
-    """Assign + residual + PQ-encode ``df`` against FROZEN artifacts —
-    the shared map-only path of build (whole corpus) and append (batch
-    only). Returns (cent_id, neighbor_id, codes, cent_sim)."""
-    cent_rows = frozen_cents.select(F.explode("__cents").alias("c")).select(
-        F.col("c.cid").alias("cent_id"), F.col("c.cq").alias("cent_cq")
-    )
-    assign = ivf_assign(df, frozen_cents, id_col, vec_col)
-    resid = assign.join(F.broadcast(cent_rows), on="cent_id").select(
-        "cent_id", "neighbor_id", "cent_sim",
-        F.zip_with("c_q", "cent_cq", lambda a, b: a - b).alias("r_q"),
-    )
-    codes = pq_encode(
-        resid, "neighbor_id", "r_q", dim, subspaces, kcodes,
-        codebook=cb, pre_quantized=True,
-    ).withColumnRenamed("vec_id", "neighbor_id")
-    return resid.select("cent_id", "neighbor_id", "cent_sim").join(
-        codes, on="neighbor_id"
+def ivfpq_codec(
+    num_centroids: int = 8, dim: int = 64, subspaces: int = 32,
+    kcodes: int = 16,
+) -> IndexCodec:
+    """IVF-PQ: artifacts ``__centroids`` (one-row frozen coarse array) and
+    ``__codebook`` (m, c, cent — the trained residual codebook, the
+    artifact FAISS writes to its index file), codes ``__codes``
+    (cent_id, neighbor_id, cent_sim, codes). Training is the coarse
+    choice plus the residual Lloyd (:func:`ivfpq_train`); search is
+    :func:`ivfpq_topk`'s ADC plan (:func:`ivfpq_serve`). No drift
+    monitor."""
+    def train(spark, corpus, id_col, vec_col):
+        cb = ivfpq_train(
+            corpus, id_col, vec_col, num_centroids, dim, subspaces, kcodes
+        )
+        return {
+            "__centroids": centroid_array(
+                corpus, id_col, vec_col, num_centroids
+            ),
+            "__codebook": _codebook_table(spark, cb),
+        }
+
+    def encode(df, arts, id_col, vec_col):
+        return _ivfpq_encode(
+            df, arts["__centroids"], _codebook_list(arts["__codebook"]),
+            id_col, vec_col, dim, subspaces, kcodes,
+        )
+
+    def search(codes, arts, queries, id_col, vec_col, k, nprobe):
+        return ivfpq_serve(
+            codes, arts["__centroids"], queries,
+            _codebook_list(arts["__codebook"]), id_col, vec_col,
+            k=k, nprobe=nprobe, dim=dim, subspaces=subspaces, kcodes=kcodes,
+        )
+
+    return IndexCodec(
+        artifacts=("__centroids", "__codebook"),
+        codes="__codes",
+        train=train,
+        encode=encode,
+        search=search,
     )
 
 
-def ivfpq_index_build(
+def sq8_codec(dim: int = 64) -> IndexCodec:
+    """SQ8: artifact ``__codec`` (the one-row per-dimension min/max), codes
+    ``__codes`` (id, int8 codes). Appended components outside the frozen
+    rails CLAMP (:func:`sq8_encode`'s saturation semantics); search
+    encodes the queries against the frozen codec and runs
+    :func:`sq8_topk`'s ADC plan (:func:`sq8_serve`; ``nprobe`` unused).
+    Drift flags a batch row with at least one dimension outside the
+    rails — the distribution has escaped the codec's range, so
+    reconstruction error is no longer bounded by the training data."""
+    def flag(batch, arts, id_col, vec_col):
+        outside = F.exists(
+            _with_rails(vec_col),
+            lambda c: (c["q"] < c["mn"]) | (c["q"] > c["mx"]),
+        )
+        return (
+            batch.withColumn("__one", F.lit(1))
+            .join(F.broadcast(arts["__codec"]), on="__one")
+            .select(outside.alias("__flag"))
+        )
+
+    return IndexCodec(
+        artifacts=("__codec",),
+        codes="__codes",
+        train=lambda spark, corpus, id_col, vec_col: {
+            "__codec": sq8_train(corpus, vec_col, dim),
+        },
+        encode=lambda df, arts, id_col, vec_col: sq8_encode(
+            df, arts["__codec"], id_col, vec_col
+        ),
+        search=lambda codes, arts, queries, id_col, vec_col, k, nprobe:
+            sq8_serve(
+                codes, arts["__codec"],
+                sq8_encode(queries, arts["__codec"], id_col, vec_col),
+                id_col, k,
+            ),
+        flag=flag,
+    )
+
+
+def _read_artifacts(spark, index_path: str, codec: IndexCodec) -> dict:
+    from furchild_spark.engine import materialize as mat
+
+    return {s: mat.read_table(spark, index_path + s) for s in codec.artifacts}
+
+
+def _train_and_encode(spark, corpus, index_path, codec, id_col, vec_col,
+                      write) -> None:
+    """The one sequence build and retrain share: train, persist every
+    artifact, read each back, encode the corpus against the read-back
+    copies, persist the codes. ``write(path, df)`` persists one table
+    and returns its read-back; it is the only thing the two differ in."""
+    arts = {
+        s: write(index_path + s, df)
+        for s, df in codec.train(spark, corpus, id_col, vec_col).items()
+    }
+    write(index_path + codec.codes, codec.encode(corpus, arts, id_col, vec_col))
+
+
+def index_build(
     spark,
     corpus: DataFrame,
     index_path: str,
+    codec: IndexCodec,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    num_centroids: int = 8,
-    dim: int = 64,
-    subspaces: int = 32,
-    kcodes: int = 16,
 ) -> None:
-    """Materialize an IVF-PQ index as three tables — ``__centroids``
-    (one-row frozen coarse array), ``__codebook`` (m, c, cent — the
-    trained residual codebook, the artifact FAISS writes to its index
-    file), ``__codes`` (cent_id, neighbor_id, codes) — completing the
-    FAISS train-once/add-many lifecycle for the PQ family: training
-    (coarse choice + residual Lloyd) is paid ONCE at build; appends
-    encode only their batch against the frozen artifacts."""
+    """Train ``codec`` on ``corpus`` and materialize the index: the
+    frozen artifact tables plus the codes table. The mirror of
+    ``semdedup_incremental``'s shared-artifact pattern and FAISS's
+    train-once/add-many contract: training is paid ONCE; every later
+    batch encodes against the FROZEN artifacts."""
     from furchild_spark.engine import materialize as mat
 
-    cents = centroid_array(corpus, id_col, vec_col, num_centroids)
-    frozen = mat.overwrite(spark, f"{index_path}__centroids", cents)
-    cb = ivfpq_train(
-        corpus, id_col, vec_col, num_centroids, dim, subspaces, kcodes
-    )
-    mat.overwrite(
-        spark, f"{index_path}__codebook", _codebook_table(spark, cb),
-        return_table=False,
-    )
-    mat.overwrite(
-        spark, f"{index_path}__codes",
-        _ivfpq_encode_against(
-            corpus, frozen, cb, id_col, vec_col, dim, subspaces, kcodes
-        ),
-        return_table=False,
+    _train_and_encode(
+        spark, corpus, index_path, codec, id_col, vec_col,
+        lambda path, df: mat.overwrite(spark, path, df),
     )
 
 
-def ivfpq_index_append(
+def index_append(
     spark,
     batch: DataFrame,
     index_path: str,
+    codec: IndexCodec,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
-    subspaces: int = 32,
-    kcodes: int = 16,
-) -> DataFrame:
-    """FAISS ``add()`` for the PQ index: assign + residual-encode ONLY
-    the batch against the frozen centroid/codebook artifacts and append
-    to ``__codes`` — O(batch) map-only work, no retrain, no re-encode of
-    the existing corpus. Returns the batch's coded rows (cent_sim rides
-    along for :func:`ivf_index_drift`)."""
+) -> None:
+    """FAISS ``add()``: encode ONLY the batch against the frozen artifacts
+    and append to the codes table — O(batch) map-only work plus one
+    append; the existing corpus is never re-read or re-encoded, and the
+    codes table's existing files are carried untouched."""
     from furchild_spark.engine import materialize as mat
 
-    frozen = mat.read_table(spark, f"{index_path}__centroids")
-    cb = _read_codebook(spark, f"{index_path}__codebook")
-    coded = _ivfpq_encode_against(
-        batch, frozen, cb, id_col, vec_col, dim, subspaces, kcodes
-    ).localCheckpoint()
-    mat.append_rows(spark, f"{index_path}__codes", coded, return_table=False)
-    return coded
+    arts = _read_artifacts(spark, index_path, codec)
+    mat.append_rows(
+        spark, index_path + codec.codes,
+        codec.encode(batch, arts, id_col, vec_col), return_table=False,
+    )
 
 
-def ivfpq_index_search(
+def index_search(
     spark,
     queries: DataFrame,
     index_path: str,
+    codec: IndexCodec,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 2,
-    dim: int = 64,
-    subspaces: int = 32,
-    kcodes: int = 16,
 ) -> DataFrame:
-    """ADC search over the MAINTAINED codes table — the identical serve
-    plan as :func:`ivfpq_topk` (shared :func:`ivfpq_serve`), reading the
-    persisted index instead of rebuilding it."""
+    """Top-k search over the MAINTAINED index — the same serve plan as
+    the codec's inline build (``ivf_topk``, ``ivfpq_topk``, ``sq8_topk``),
+    but the corpus side is the persisted codes table, so a search after
+    N appends never re-encodes anything."""
     from furchild_spark.engine import materialize as mat
 
-    frozen = mat.read_table(spark, f"{index_path}__centroids")
-    cb = _read_codebook(spark, f"{index_path}__codebook")
-    coded = mat.read_table(spark, f"{index_path}__codes")
-    return ivfpq_serve(
-        coded, frozen, queries, cb, id_col, vec_col,
-        k=k, nprobe=nprobe, dim=dim, subspaces=subspaces, kcodes=kcodes,
+    return codec.search(
+        mat.read_table(spark, index_path + codec.codes),
+        _read_artifacts(spark, index_path, codec),
+        queries, id_col, vec_col, k, nprobe,
     )
 
 
-def _stage_and_swap(spark, tables: "dict[str, DataFrame]") -> None:
-    """Write every artifact to ``<path>__staged`` FIRST (all compute
-    happens before any live table moves), then promote each with the
-    materializer's crash-safe rename swap. Per-table promotion is atomic
-    (readers in a swap window fall back to ``__old`` via read_table); a
-    reader interleaving BETWEEN two swaps can briefly pair a new
-    artifact with an old one — the txlog table format (engine/txlog.py)
-    is the upgrade path when multi-table snapshot isolation matters, the
-    same way FAISS sidesteps this by swapping one index file."""
-    from furchild_spark.engine import materialize as mat
-
-    for path, df in tables.items():
-        if df is not None:  # None = caller already staged this path
-            df.write.mode("overwrite").parquet(path + "__staged")
-    for path in tables:
-        mat._swap_in(spark, path)
-
-
-def ivf_index_retrain(
+def index_retrain(
     spark,
     corpus: DataFrame,
     index_path: str,
+    codec: IndexCodec,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    num_centroids: int = 8,
 ) -> None:
-    """Drift-triggered retrain (VERDICT r10 #4): rebuild BOTH artifacts
-    from the accumulated corpus and swap them in atomically, completing
-    the monitor→decision→action loop (``ivf_index_drift`` decides,
-    this executes). Appends resume against the new artifacts unchanged.
-    Post-retrain state is bit-for-bit what a fresh
-    :func:`ivf_index_build` over the same corpus writes (pytest-proven),
-    so searches after retrain ≡ searches against a from-scratch index.
+    """Drift-triggered retrain: the :func:`index_build` sequence over the
+    accumulated corpus, committed crash-safely. Every table is written to
+    ``<path>__staged`` first — the codes are encoded against the STAGED
+    artifacts — and only then does each live table move, by the
+    materializer's rename swap. A crash while staging leaves the live
+    index untouched; the post-retrain state is exactly what a fresh
+    :func:`index_build` over the same corpus writes (pytest-proven), and
+    appends resume against the new artifacts unchanged.
+
+    Per-table promotion is atomic (readers in a swap window fall back to
+    ``__old`` via read_table); a reader interleaving BETWEEN two swaps
+    can briefly pair a new artifact with an old one — the txlog table
+    format is the upgrade path when multi-table snapshot isolation
+    matters, the way FAISS sidesteps it by swapping one index file.
 
     The raw corpus is caller-provided — FAISS retrain semantics: the
-    index is DERIVED state; at 100 TB the corpus is a table you already
-    maintain, and rebuilding from the index's own lossy artifacts
-    (SQ8/PQ codes) would bake quantization error into the new training.
-    """
-    cents = centroid_array(corpus, id_col, vec_col, num_centroids)
-    cents.write.mode("overwrite").parquet(f"{index_path}__centroids__staged")
-    staged = spark.read.parquet(f"{index_path}__centroids__staged")
-    _stage_and_swap(spark, {
-        f"{index_path}__centroids": None,  # staged above (lists need it)
-        f"{index_path}__lists": ivf_assign(corpus, staged, id_col, vec_col),
-    })
-
-
-def ivfpq_index_retrain(
-    spark,
-    corpus: DataFrame,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_centroids: int = 8,
-    dim: int = 64,
-    subspaces: int = 32,
-    kcodes: int = 16,
-) -> None:
-    """Retrain + swap for the PQ family: re-run the residual Lloyd on
-    the accumulated corpus (the codebook is the distribution-dependent
-    artifact drift invalidates), re-encode, and promote all three
-    tables. Mirrors :func:`ivfpq_index_build` exactly."""
-    cents = centroid_array(corpus, id_col, vec_col, num_centroids)
-    cents.write.mode("overwrite").parquet(f"{index_path}__centroids__staged")
-    staged = spark.read.parquet(f"{index_path}__centroids__staged")
-    cb = ivfpq_train(
-        corpus, id_col, vec_col, num_centroids, dim, subspaces, kcodes
-    )
-    _stage_and_swap(spark, {
-        f"{index_path}__centroids": None,  # staged above (codes need it)
-        f"{index_path}__codebook": _codebook_table(spark, cb),
-        f"{index_path}__codes": _ivfpq_encode_against(
-            corpus, staged, cb, id_col, vec_col, dim, subspaces, kcodes
-        ),
-    })
-
-
-def sq8_index_retrain(
-    spark,
-    corpus: DataFrame,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> None:
-    """Retrain + swap for SQ8: recompute the per-dimension min/max codec
-    over the accumulated corpus (drift = appended vectors saturating the
-    frozen rails, ``sq8_index_drift``), re-encode, promote both tables.
-    Restores the drifted-recall floor: saturated codes collapse
-    out-of-range components onto the rails, distorting every ADC
-    distance — the widened codec represents them again."""
-    codec = sq8_train(corpus, vec_col, dim)
-    codec.write.mode("overwrite").parquet(f"{index_path}__codec__staged")
-    staged = spark.read.parquet(f"{index_path}__codec__staged")
-    _stage_and_swap(spark, {
-        f"{index_path}__codec": None,  # staged above (codes need it)
-        f"{index_path}__codes": sq8_encode(corpus, staged, id_col, vec_col),
-    })
-
-
-# ---------------------------------------------------------------------------
-# maintained SQ8 index: frozen min/max codec + codes table
-# ---------------------------------------------------------------------------
-
-def sq8_index_build(
-    spark,
-    corpus: DataFrame,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> None:
-    """Materialize an SQ8 index as two tables — ``__codec`` (the 1-row
-    per-dimension min/max artifact) and ``__codes`` (id, int8 codes) —
-    completing the maintained-index family (IVF-flat, IVF-PQ, SQ8):
-    every ANN serving strategy now has a FAISS-style
-    train-once/add-many lifecycle."""
+    index is DERIVED state, and rebuilding from its own lossy codes
+    would bake quantization error into the new training."""
     from furchild_spark.engine import materialize as mat
 
-    codec = sq8_train(corpus, vec_col, dim)
-    frozen = mat.overwrite(spark, f"{index_path}__codec", codec)
-    mat.overwrite(
-        spark, f"{index_path}__codes",
-        sq8_encode(corpus, frozen, id_col, vec_col),
-        return_table=False,
+    def stage(path, df):
+        mat._stage(spark, path, df)
+        return mat._read_back_hinted(spark, path + "__staged", df.schema)
+
+    _train_and_encode(
+        spark, corpus, index_path, codec, id_col, vec_col, stage
     )
+    for s in (*codec.artifacts, codec.codes):
+        mat._swap_in(spark, index_path + s)
 
 
-def sq8_index_append(
+def index_drift(
     spark,
     batch: DataFrame,
     index_path: str,
+    codec: IndexCodec,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    max_frac: float = 0.2,
 ) -> DataFrame:
-    """FAISS ``add()`` for SQ8: encode ONLY the batch against the frozen
-    codec and append — O(batch) map-only. Out-of-range components CLAMP
-    to the rails (sq8_encode's documented saturation semantics); use
-    :func:`sq8_index_drift` to decide when the frozen codec has stopped
-    describing the data. Returns the batch's coded rows."""
-    from furchild_spark.engine import materialize as mat
+    """Drift monitor for the frozen artifacts: the fraction of the batch
+    the codec flags (``IndexCodec.flag``), and whether it exceeds
+    ``max_frac`` — the decision that gates :func:`index_retrain`. One
+    map-side aggregate over integer counts, so an oracle replays the
+    decision exactly.
 
-    frozen = mat.read_table(spark, f"{index_path}__codec")
-    coded = sq8_encode(batch, frozen, id_col, vec_col).localCheckpoint()
-    mat.append_rows(spark, f"{index_path}__codes", coded, return_table=False)
-    return coded
-
-
-def sq8_index_search(
-    spark,
-    queries: DataFrame,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """ADC search over the MAINTAINED codes — the identical serve plan
-    as :func:`sq8_topk` (shared :func:`sq8_serve`); queries are encoded
-    against the frozen codec at search time."""
-    from furchild_spark.engine import materialize as mat
-
-    frozen = mat.read_table(spark, f"{index_path}__codec")
-    coded = mat.read_table(spark, f"{index_path}__codes")
-    return sq8_serve(
-        coded, frozen, sq8_encode(queries, frozen, id_col, vec_col),
-        id_col, k,
+    Returns one row: (n_batch, n_flagged, frac, needs_retrain). An EMPTY
+    batch deterministically reports no drift (0, 0, 0.0, false), never a
+    three-valued NULL a caller's boolean gate would silently skip."""
+    if codec.flag is None:
+        raise ValueError("this index codec has no drift monitor")
+    flags = codec.flag(
+        batch, _read_artifacts(spark, index_path, codec), id_col, vec_col
     )
-
-
-def sq8_index_drift(
-    spark,
-    batch: DataFrame,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_sat_frac: float = 0.2,
-) -> DataFrame:
-    """Drift monitor for the frozen SQ8 codec: the fraction of batch
-    vectors with at least one SATURATED dimension (raw quantized value
-    outside the trained [min, max]) — the distribution has escaped the
-    codec's range and reconstruction error is no longer bounded by the
-    training data. One map-side aggregate; exact integer comparisons, so
-    an oracle replays the decision.
-
-    Returns one row: (n_batch, n_saturated, sat_frac, needs_retrain)."""
-    from furchild_spark.engine import materialize as mat
-
-    frozen = mat.read_table(spark, f"{index_path}__codec")
-    zipped = F.zip_with(
-        F.zip_with(
-            quantize(vec_col), F.col("mins"),
-            lambda q, mn: F.struct(q.alias("q"), mn.alias("mn")),
-        ),
-        F.col("maxs"),
-        lambda s, mx: F.struct(
-            s["q"].alias("q"), s["mn"].alias("mn"), mx.alias("mx")
-        ),
-    )
-    sat = F.exists(zipped, lambda c: (c["q"] < c["mn"]) | (c["q"] > c["mx"]))
-    return (
-        batch.withColumn("__one", F.lit(1))
-        .join(F.broadcast(frozen), on="__one")
-        .select(sat.alias("__sat"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_batch"),
-            F.coalesce(
-                F.sum(F.col("__sat").cast("long")), F.lit(0)
-            ).cast("long").alias("n_saturated"),
-        )
-        .select(
-            "n_batch", "n_saturated",
-            F.when(
-                F.col("n_batch") > 0,
-                F.round(
-                    F.col("n_saturated").cast("double")
-                    / F.col("n_batch").cast("double"), 6,
-                ),
-            ).otherwise(F.lit(0.0)).alias("sat_frac"),
-            F.when(
-                F.col("n_batch") > 0,
-                F.col("n_saturated").cast("double")
-                > F.col("n_batch").cast("double") * F.lit(max_sat_frac),
-            ).otherwise(F.lit(False)).alias("needs_retrain"),
-        )
+    n, flagged = F.col("n_batch"), F.col("n_flagged")
+    return flags.agg(
+        F.count(F.lit(1)).cast("long").alias("n_batch"),
+        F.coalesce(
+            F.sum(F.col("__flag").cast("long")), F.lit(0)
+        ).cast("long").alias("n_flagged"),
+    ).select(
+        "n_batch", "n_flagged",
+        F.when(
+            n > 0, F.round(flagged.cast("double") / n.cast("double"), 6)
+        ).otherwise(F.lit(0.0)).alias("frac"),
+        F.when(
+            n > 0, flagged.cast("double") > n.cast("double") * F.lit(max_frac)
+        ).otherwise(F.lit(False)).alias("needs_retrain"),
     )

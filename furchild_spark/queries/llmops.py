@@ -4098,19 +4098,20 @@ CROSS JOIN drift d
 """,
 )
 def ann_ivf_incremental(spark, sf_dir):
-    """Maintained-IVF lifecycle (operators/similarity.ivf_index_*):
-    build on vec_id < 250, ivf_index_append the rest (batch-only
-    assignment against the frozen on-disk centroid artifact — the FAISS
-    add() pattern, mirror of semdedup_incremental), search the persisted
-    lists with the SAME probe plan as ann_ivf_topk, and evaluate the
-    drift hook on the batch's assignment sims. ``hit_exact`` is the
-    brute-force recall tripwire per result row; ``low_frac``/
-    ``needs_retrain`` pin the drift decision into the hash."""
+    """Maintained-IVF lifecycle (operators/similarity.index_* with
+    ivf_flat_codec): build on vec_id < 250, index_append the rest
+    (batch-only assignment against the frozen on-disk centroid artifact —
+    the FAISS add() pattern, mirror of semdedup_incremental), search the
+    persisted lists with the SAME probe plan as ann_ivf_topk, and
+    evaluate the drift monitor on the batch's assignment sims.
+    ``hit_exact`` is the brute-force recall tripwire per result row;
+    ``low_frac``/``needs_retrain`` pin the drift decision into the
+    hash."""
     import tempfile as _tf
 
     from furchild_spark.operators.similarity import (
-        cosine_topk_bruteforce, ivf_index_append, ivf_index_build,
-        ivf_index_drift, ivf_index_search,
+        cosine_topk_bruteforce, index_append, index_build, index_drift,
+        index_search, ivf_flat_codec,
     )
 
     emb = table(spark, sf_dir, "embeddings")
@@ -4119,18 +4120,18 @@ def ann_ivf_incremental(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 10)
     path = _tf.mkdtemp(prefix="ann_ivf_incr_") + "/ivf"
 
-    ivf_index_build(spark, base, path, "vec_id", "embedding",
-                    num_centroids=8)
-    batch_assign = ivf_index_append(spark, batch, path, "vec_id",
-                                    "embedding")
-    drift = ivf_index_drift(batch_assign, min_sim=0.5, max_low_frac=0.2)
-    res = ivf_index_search(spark, queries, path, "vec_id", "embedding",
-                           k=5, nprobe=2)
+    codec = ivf_flat_codec(num_centroids=8, min_sim=0.5)
+    index_build(spark, base, path, codec)
+    index_append(spark, batch, path, codec)
+    drift = index_drift(spark, batch, path, codec, max_frac=0.2)
+    res = index_search(spark, queries, path, codec, k=5, nprobe=2)
     bf = cosine_topk_bruteforce(emb, queries, "vec_id", "embedding", k=5)
     hits = bf.select("query_id", "neighbor_id", F.lit(True).alias("__hit"))
     return (
         res.join(hits, on=["query_id", "neighbor_id"], how="left")
-        .crossJoin(F.broadcast(drift.select("low_frac", "needs_retrain")))
+        .crossJoin(F.broadcast(drift.select(
+            F.col("frac").alias("low_frac"), "needs_retrain"
+        )))
         .select(
             "query_id",
             F.col("rank").cast("long").alias("rank"),
@@ -4263,18 +4264,18 @@ FROM (
 """,
 )
 def ann_ivfpq_incremental(spark, sf_dir):
-    """Maintained-IVF-PQ lifecycle (operators/similarity.ivfpq_index_*):
-    build on vec_id < 250 (frozen coarse centroids + residual codebook
-    trained on BASE residuals only + base codes), ivfpq_index_append the
-    rest (batch-only assign + residual encode against the frozen on-disk
-    artifacts — FAISS add() for the PQ family), then ADC-search the
-    maintained codes with ann_ivfpq_topk's exact serve plan.
-    ``from_batch`` pins appended rows appearing in results into the
-    hash."""
+    """Maintained-IVF-PQ lifecycle (operators/similarity.index_* with
+    ivfpq_codec): build on vec_id < 250 (frozen coarse centroids +
+    residual codebook trained on BASE residuals only + base codes),
+    index_append the rest (batch-only assign + residual encode against
+    the frozen on-disk artifacts — FAISS add() for the PQ family), then
+    ADC-search the maintained codes with ann_ivfpq_topk's exact serve
+    plan. ``from_batch`` pins appended rows appearing in results into
+    the hash."""
     import tempfile as _tf
 
     from furchild_spark.operators.similarity import (
-        ivfpq_index_append, ivfpq_index_build, ivfpq_index_search,
+        index_append, index_build, index_search, ivfpq_codec,
     )
 
     emb = table(spark, sf_dir, "embeddings")
@@ -4283,12 +4284,10 @@ def ann_ivfpq_incremental(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 10)
     path = _tf.mkdtemp(prefix="ann_ivfpq_incr_") + "/ivfpq"
 
-    ivfpq_index_build(spark, base, path, "vec_id", "embedding",
-                      num_centroids=8, dim=64, subspaces=32, kcodes=16)
-    ivfpq_index_append(spark, batch, path, "vec_id", "embedding",
-                       dim=64, subspaces=32, kcodes=16)
-    res = ivfpq_index_search(spark, queries, path, "vec_id", "embedding",
-                             k=5, nprobe=2, dim=64, subspaces=32, kcodes=16)
+    codec = ivfpq_codec(num_centroids=8, dim=64, subspaces=32, kcodes=16)
+    index_build(spark, base, path, codec)
+    index_append(spark, batch, path, codec)
+    res = index_search(spark, queries, path, codec, k=5, nprobe=2)
     return res.select(
         "query_id",
         F.col("rank").cast("long").alias("rank"),
@@ -4362,18 +4361,17 @@ WHERE rank <= 5
 """,
 )
 def ann_sq8_incremental(spark, sf_dir):
-    """Maintained-SQ8 lifecycle (operators/similarity.sq8_index_*):
-    build on vec_id < 250 (frozen per-dimension min/max codec + base
-    codes), sq8_index_append the rest (batch-only encode against the
-    frozen on-disk codec, out-of-range components clamping to the
-    rails), ADC-search the maintained codes with ann_sq8_topk's exact
-    serve plan, and pin the saturation-drift decision
-    (sq8_index_drift) into the hash."""
+    """Maintained-SQ8 lifecycle (operators/similarity.index_* with
+    sq8_codec): build on vec_id < 250 (frozen per-dimension min/max
+    codec + base codes), index_append the rest (batch-only encode
+    against the frozen on-disk codec, out-of-range components clamping
+    to the rails), ADC-search the maintained codes with ann_sq8_topk's
+    exact serve plan, and pin the saturation-drift decision
+    (index_drift) into the hash."""
     import tempfile as _tf
 
     from furchild_spark.operators.similarity import (
-        sq8_index_append, sq8_index_build, sq8_index_drift,
-        sq8_index_search,
+        index_append, index_build, index_drift, index_search, sq8_codec,
     )
 
     e = table(spark, sf_dir, "embeddings")
@@ -4382,14 +4380,15 @@ def ann_sq8_incremental(spark, sf_dir):
     queries = e.filter(F.col("vec_id").isin(*_SQ8_QUERY_IDS))
     path = _tf.mkdtemp(prefix="ann_sq8_incr_") + "/sq8"
 
-    sq8_index_build(spark, base, path, "vec_id", "embedding", dim=64)
-    sq8_index_append(spark, batch, path, "vec_id", "embedding")
-    drift = sq8_index_drift(spark, batch, path, "vec_id", "embedding",
-                            max_sat_frac=0.2)
-    res = sq8_index_search(spark, queries, path, "vec_id", "embedding",
-                           k=5)
+    codec = sq8_codec(dim=64)
+    index_build(spark, base, path, codec)
+    index_append(spark, batch, path, codec)
+    drift = index_drift(spark, batch, path, codec, max_frac=0.2)
+    res = index_search(spark, queries, path, codec, k=5)
     return (
-        res.crossJoin(F.broadcast(drift.select("sat_frac", "needs_retrain")))
+        res.crossJoin(F.broadcast(drift.select(
+            F.col("frac").alias("sat_frac"), "needs_retrain"
+        )))
         .select(
             "query_id",
             F.col("rank").cast("long").alias("rank"),
@@ -4408,7 +4407,7 @@ def ann_sq8_incremental(spark, sf_dir):
         "LLM-similarity DRIFT→RETRAIN→SWAP (r10 VERDICT #4 — the "
         "monitor's needs_retrain decision wired to an action): a 10×- "
         "scaled batch saturates the frozen SQ8 rails (drift fires), "
-        "sq8_index_retrain rebuilds codec+codes from the accumulated "
+        "index_retrain rebuilds codec+codes from the accumulated "
         "corpus and swaps them atomically, the re-checked monitor "
         "reports clean, and the post-retrain ADC search — hash-pinned "
         "here — is bit-for-bit a fresh rebuild's (pytest proves the "
@@ -4493,7 +4492,8 @@ WHERE rank <= 5
 """,
 )
 def ann_sq8_retrain_e2e(spark, sf_dir):
-    """The complete drift lifecycle (operators/similarity.sq8_index_*):
+    """The complete drift lifecycle (operators/similarity.index_* with
+    sq8_codec):
     build the codec on the unscaled base, append a 10×-scaled batch
     (heavy saturation — the distribution escaped the rails), let the
     MONITOR's decision gate the RETRAIN (codec+codes rebuilt over the
@@ -4502,8 +4502,8 @@ def ann_sq8_retrain_e2e(spark, sf_dir):
     import tempfile as _tf
 
     from furchild_spark.operators.similarity import (
-        sq8_index_append, sq8_index_build, sq8_index_drift,
-        sq8_index_retrain, sq8_index_search,
+        index_append, index_build, index_drift, index_retrain,
+        index_search, sq8_codec,
     )
 
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -4516,19 +4516,19 @@ def ann_sq8_retrain_e2e(spark, sf_dir):
     queries = batch.filter(F.col("vec_id").isin(251, 257, 263))
     path = _tf.mkdtemp(prefix="ann_sq8_retrain_") + "/sq8"
 
-    sq8_index_build(spark, base, path, "vec_id", "embedding", dim=64)
-    sq8_index_append(spark, batch, path, "vec_id", "embedding")
-    fired = sq8_index_drift(
-        spark, batch, path, "vec_id", "embedding", max_sat_frac=0.2
+    codec = sq8_codec(dim=64)
+    index_build(spark, base, path, codec)
+    index_append(spark, batch, path, codec)
+    fired = index_drift(
+        spark, batch, path, codec, max_frac=0.2
     ).first()["needs_retrain"]
     if fired:  # the monitor's decision GATES the action
-        sq8_index_retrain(spark, corpus, path, "vec_id", "embedding")
-    after = sq8_index_drift(spark, batch, path, "vec_id", "embedding",
-                            max_sat_frac=0.2)
-    res = sq8_index_search(spark, queries, path, "vec_id", "embedding", k=5)
+        index_retrain(spark, corpus, path, codec)
+    after = index_drift(spark, batch, path, codec, max_frac=0.2)
+    res = index_search(spark, queries, path, codec, k=5)
     return (
         res.crossJoin(F.broadcast(after.select(
-            F.col("sat_frac").alias("sat_frac_after"),
+            F.col("frac").alias("sat_frac_after"),
             F.col("needs_retrain").alias("needs_retrain_after"),
         )))
         .select(

@@ -237,8 +237,8 @@ def test_maintained_ivf_equals_rebuild_and_append_is_batch_only(spark, tmp_path)
     from pyspark.sql import functions as F
 
     from furchild_spark.operators.similarity import (
-        ivf_index_append, ivf_index_build, ivf_index_drift,
-        ivf_index_search, ivf_topk,
+        index_append, index_build, index_drift, index_search,
+        ivf_flat_codec, ivf_topk,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -247,30 +247,30 @@ def test_maintained_ivf_equals_rebuild_and_append_is_batch_only(spark, tmp_path)
     queries = emb.filter(F.col("vec_id") < 10)
     path = str(tmp_path / "ivf")
 
-    ivf_index_build(spark, base, path, "vec_id", "embedding", num_centroids=8)
+    codec = ivf_flat_codec(num_centroids=8, min_sim=0.5)
+    index_build(spark, base, path, codec)
     files_before = set(os.listdir(f"{path}__lists"))
-    batch_assign = ivf_index_append(spark, batch, path, "vec_id", "embedding")
+    index_append(spark, batch, path, codec)
     files_after = set(os.listdir(f"{path}__lists"))
     assert files_before <= files_after  # base files carried, not rewritten
     assert files_after - files_before   # batch landed as new files
 
-    got = ivf_index_search(spark, queries, path, "vec_id", "embedding",
-                           k=5, nprobe=2)
+    got = index_search(spark, queries, path, codec, k=5, nprobe=2)
     want = ivf_topk(emb, queries, "vec_id", "embedding", k=5,
                     num_centroids=8, nprobe=2)
     g = {tuple(r) for r in got.collect()}
     w = {tuple(r) for r in want.collect()}
     assert g == w  # recall tripwire: maintained ≡ rebuild, exactly
 
-    d = ivf_index_drift(batch_assign, min_sim=0.5, max_low_frac=0.2).first()
+    d = index_drift(spark, batch, path, codec, max_frac=0.2).first()
     assert d["n_batch"] == batch.count()
-    assert 0.0 <= d["low_frac"] <= 1.0
+    assert 0.0 <= d["frac"] <= 1.0
 
     # r10 ADVICE: an EMPTY append batch must deterministically report no
     # drift — (0, 0, 0.0, False), never NULLs a boolean gate skips over
-    d0 = ivf_index_drift(batch_assign.limit(0)).first()
-    assert (d0["n_batch"], d0["n_low"]) == (0, 0)
-    assert d0["low_frac"] == 0.0 and d0["needs_retrain"] is False
+    d0 = index_drift(spark, batch.limit(0), path, codec).first()
+    assert (d0["n_batch"], d0["n_flagged"]) == (0, 0)
+    assert d0["frac"] == 0.0 and d0["needs_retrain"] is False
 
 
 def test_maintained_ivfpq_equals_frozen_codebook_rebuild(spark, tmp_path):
@@ -283,8 +283,8 @@ def test_maintained_ivfpq_equals_frozen_codebook_rebuild(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from furchild_spark.operators.similarity import (
-        ivfpq_index_append, ivfpq_index_build, ivfpq_index_search,
-        ivfpq_topk, ivfpq_train,
+        index_append, index_build, index_search, ivfpq_codec, ivfpq_topk,
+        ivfpq_train,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -293,16 +293,14 @@ def test_maintained_ivfpq_equals_frozen_codebook_rebuild(spark, tmp_path):
     queries = emb.filter(F.col("vec_id") < 10)
     path = str(tmp_path / "ivfpq")
 
-    ivfpq_index_build(spark, base, path, "vec_id", "embedding",
-                      num_centroids=8, dim=64, subspaces=32, kcodes=16)
+    codec = ivfpq_codec(num_centroids=8, dim=64, subspaces=32, kcodes=16)
+    index_build(spark, base, path, codec)
     before = set(os.listdir(f"{path}__codes"))
-    ivfpq_index_append(spark, batch, path, "vec_id", "embedding",
-                       dim=64, subspaces=32, kcodes=16)
+    index_append(spark, batch, path, codec)
     after = set(os.listdir(f"{path}__codes"))
     assert before <= after and after - before
 
-    got = ivfpq_index_search(spark, queries, path, "vec_id", "embedding",
-                             k=5, nprobe=2, dim=64, subspaces=32, kcodes=16)
+    got = index_search(spark, queries, path, codec, k=5, nprobe=2)
     cb_base = ivfpq_train(base, "vec_id", "embedding", 8, 64, 32, 16)
     want = ivfpq_topk(emb, queries, "vec_id", "embedding", k=5,
                       num_centroids=8, nprobe=2, dim=64, subspaces=32,
@@ -322,8 +320,8 @@ def test_maintained_sq8_equals_frozen_codec_rebuild(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from furchild_spark.operators.similarity import (
-        quantize, sq8_encode, sq8_index_append, sq8_index_build,
-        sq8_index_drift, sq8_index_search, sq8_serve, sq8_train,
+        index_append, index_build, index_drift, index_search, quantize,
+        sq8_codec, sq8_encode, sq8_serve, sq8_train,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -332,13 +330,14 @@ def test_maintained_sq8_equals_frozen_codec_rebuild(spark, tmp_path):
     queries = emb.filter(F.col("vec_id") < 5)
     path = str(tmp_path / "sq8")
 
-    sq8_index_build(spark, base, path, "vec_id", "embedding", dim=64)
+    codec_ = sq8_codec(dim=64)
+    index_build(spark, base, path, codec_)
     before = set(os.listdir(f"{path}__codes"))
-    sq8_index_append(spark, batch, path, "vec_id", "embedding")
+    index_append(spark, batch, path, codec_)
     after = set(os.listdir(f"{path}__codes"))
     assert before <= after and after - before
 
-    got = sq8_index_search(spark, queries, path, "vec_id", "embedding", k=5)
+    got = index_search(spark, queries, path, codec_, k=5)
     codec = sq8_train(base, "embedding", 64)
     want = sq8_serve(
         sq8_encode(emb, codec, "vec_id", "embedding"), codec,
@@ -346,7 +345,7 @@ def test_maintained_sq8_equals_frozen_codec_rebuild(spark, tmp_path):
     )
     assert {tuple(r) for r in got.collect()} == {tuple(r) for r in want.collect()}
 
-    d = sq8_index_drift(spark, batch, path, "vec_id", "embedding").first()
+    d = index_drift(spark, batch, path, codec_).first()
     assert d["n_batch"] == batch.count()
     # cross-check the saturation count against a direct computation
     cdc = codec.first()
@@ -356,13 +355,12 @@ def test_maintained_sq8_equals_frozen_codec_rebuild(spark, tmp_path):
         1 for r in qb
         if any(v < mins[i] or v > maxs[i] for i, v in enumerate(r["q"]))
     )
-    assert d["n_saturated"] == direct
+    assert d["n_flagged"] == direct
 
     # r10 ADVICE: empty batch → deterministic no-drift row, not NULLs
-    d0 = sq8_index_drift(spark, batch.limit(0), path, "vec_id",
-                         "embedding").first()
-    assert (d0["n_batch"], d0["n_saturated"]) == (0, 0)
-    assert d0["sat_frac"] == 0.0 and d0["needs_retrain"] is False
+    d0 = index_drift(spark, batch.limit(0), path, codec_).first()
+    assert (d0["n_batch"], d0["n_flagged"]) == (0, 0)
+    assert d0["frac"] == 0.0 and d0["needs_retrain"] is False
 
 
 # ---------------------------------------------------------------------------
@@ -370,47 +368,50 @@ def test_maintained_sq8_equals_frozen_codec_rebuild(spark, tmp_path):
 # decision now has an action wired to it)
 # ---------------------------------------------------------------------------
 
-def test_ivf_retrain_equals_fresh_rebuild(spark, tmp_path):
-    """After build+append, ivf_index_retrain over the accumulated corpus
-    must leave the index bit-for-bit identical to a from-scratch
-    ivf_index_build — appends resume against the new artifacts and
-    search ≡ fresh-index search."""
+_CODECS = {
+    "ivf": lambda sim: sim.ivf_flat_codec(num_centroids=8),
+    "ivfpq": lambda sim: sim.ivfpq_codec(),
+    "sq8": lambda sim: sim.sq8_codec(),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_CODECS))
+def test_retrain_equals_fresh_rebuild(spark, tmp_path, name):
+    """After build+append, index_retrain over the accumulated corpus must
+    leave every artifact and the codes table bit-for-bit identical to a
+    from-scratch index_build — for IVF-PQ the residual Lloyd re-runs, for
+    SQ8 the codec widens — search ≡ fresh-index search, and appends
+    resume against the swapped artifacts."""
     from furchild_spark.operators.similarity import (
-        ivf_index_append, ivf_index_build, ivf_index_retrain,
-        ivf_index_search,
+        index_append, index_build, index_retrain, index_search,
     )
 
+    codec = _CODECS[name](similarity)
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     base = emb.filter(F.col("vec_id") < 250)
     batch = emb.filter(F.col("vec_id") >= 250)
     queries = emb.filter(F.col("vec_id") < 10)
 
-    maintained = str(tmp_path / "ivf_m")
-    ivf_index_build(spark, base, maintained, "vec_id", "embedding",
-                    num_centroids=8)
-    ivf_index_append(spark, batch, maintained, "vec_id", "embedding")
-    ivf_index_retrain(spark, emb, maintained, "vec_id", "embedding",
-                      num_centroids=8)
+    maintained = str(tmp_path / f"{name}_m")
+    index_build(spark, base, maintained, codec)
+    index_append(spark, batch, maintained, codec)
+    index_retrain(spark, emb, maintained, codec)
 
-    fresh = str(tmp_path / "ivf_f")
-    ivf_index_build(spark, emb, fresh, "vec_id", "embedding",
-                    num_centroids=8)
+    fresh = str(tmp_path / f"{name}_f")
+    index_build(spark, emb, fresh, codec)
 
-    for suffix in ("__centroids", "__lists"):
+    for suffix in (*codec.artifacts, codec.codes):
         a = {tuple(map(repr, r))
              for r in spark.read.parquet(maintained + suffix).collect()}
         b = {tuple(map(repr, r))
              for r in spark.read.parquet(fresh + suffix).collect()}
         assert a == b, suffix
-    got = ivf_index_search(spark, queries, maintained, "vec_id",
-                           "embedding", k=K, nprobe=2)
-    want = ivf_index_search(spark, queries, fresh, "vec_id",
-                            "embedding", k=K, nprobe=2)
+    got = index_search(spark, queries, maintained, codec, k=K, nprobe=2)
+    want = index_search(spark, queries, fresh, codec, k=K, nprobe=2)
     assert {tuple(r) for r in got.collect()} == \
         {tuple(r) for r in want.collect()}
     # appends keep working against the swapped artifacts
-    ivf_index_append(spark, batch.limit(0), maintained, "vec_id",
-                     "embedding")
+    index_append(spark, batch.limit(0), maintained, codec)
 
 
 def test_sq8_retrain_restores_drifted_recall(spark, tmp_path):
@@ -422,8 +423,8 @@ def test_sq8_retrain_restores_drifted_recall(spark, tmp_path):
     (c) recall@k for the drifted queries is restored to the fresh-index
     floor."""
     from furchild_spark.operators.similarity import (
-        cosine_topk_bruteforce, sq8_index_append, sq8_index_build,
-        sq8_index_drift, sq8_index_retrain, sq8_index_search,
+        cosine_topk_bruteforce, index_append, index_build, index_drift,
+        index_retrain, index_search, sq8_codec,
     )
 
     emb = spark.read.parquet(
@@ -437,11 +438,12 @@ def test_sq8_retrain_restores_drifted_recall(spark, tmp_path):
     corpus = base.unionByName(scaled)
     queries = scaled.filter(F.col("vec_id") < 260)
 
+    codec = sq8_codec()
     path = str(tmp_path / "sq8_m")
-    sq8_index_build(spark, base, path, "vec_id", "embedding")
-    sq8_index_append(spark, scaled, path, "vec_id", "embedding")
-    d = sq8_index_drift(spark, scaled, path, "vec_id", "embedding").first()
-    assert d["needs_retrain"] is True and d["sat_frac"] > 0.5
+    index_build(spark, base, path, codec)
+    index_append(spark, scaled, path, codec)
+    d = index_drift(spark, scaled, path, codec).first()
+    assert d["needs_retrain"] is True and d["frac"] > 0.5
 
     truth = {}
     for r in cosine_topk_bruteforce(
@@ -455,19 +457,16 @@ def test_sq8_retrain_restores_drifted_recall(spark, tmp_path):
         hits = sum(len(got.get(q, set()) & t) for q, t in truth.items())
         return hits / sum(len(t) for t in truth.values())
 
-    before = recall(sq8_index_search(spark, queries, path, "vec_id",
-                                     "embedding", k=K))
+    before = recall(index_search(spark, queries, path, codec, k=K))
 
-    sq8_index_retrain(spark, corpus, path, "vec_id", "embedding")
-    d2 = sq8_index_drift(spark, scaled, path, "vec_id", "embedding").first()
-    assert d2["needs_retrain"] is False and d2["n_saturated"] == 0
+    index_retrain(spark, corpus, path, codec)
+    d2 = index_drift(spark, scaled, path, codec).first()
+    assert d2["needs_retrain"] is False and d2["n_flagged"] == 0
 
     fresh = str(tmp_path / "sq8_f")
-    sq8_index_build(spark, corpus, fresh, "vec_id", "embedding")
-    after_df = sq8_index_search(spark, queries, path, "vec_id",
-                                "embedding", k=K)
-    fresh_df = sq8_index_search(spark, queries, fresh, "vec_id",
-                                "embedding", k=K)
+    index_build(spark, corpus, fresh, codec)
+    after_df = index_search(spark, queries, path, codec, k=K)
+    fresh_df = index_search(spark, queries, fresh, codec, k=K)
     assert {tuple(r) for r in after_df.collect()} == \
         {tuple(r) for r in fresh_df.collect()}
     after = recall(after_df)
@@ -479,41 +478,6 @@ def test_sq8_retrain_restores_drifted_recall(spark, tmp_path):
     assert before <= 0.4 and after >= before + 0.2
 
 
-def test_ivfpq_retrain_equals_fresh_rebuild(spark, tmp_path):
-    """PQ-family retrain: the residual Lloyd re-runs on the accumulated
-    corpus and all three artifacts swap to exactly the fresh-build
-    state."""
-    from furchild_spark.operators.similarity import (
-        ivfpq_index_append, ivfpq_index_build, ivfpq_index_retrain,
-        ivfpq_index_search,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    base = emb.filter(F.col("vec_id") < 250)
-    batch = emb.filter(F.col("vec_id") >= 250)
-    queries = emb.filter(F.col("vec_id") < 5)
-
-    maintained = str(tmp_path / "pq_m")
-    ivfpq_index_build(spark, base, maintained, "vec_id", "embedding")
-    ivfpq_index_append(spark, batch, maintained, "vec_id", "embedding")
-    ivfpq_index_retrain(spark, emb, maintained, "vec_id", "embedding")
-
-    fresh = str(tmp_path / "pq_f")
-    ivfpq_index_build(spark, emb, fresh, "vec_id", "embedding")
-    for suffix in ("__centroids", "__codebook", "__codes"):
-        a = {tuple(map(repr, r))
-             for r in spark.read.parquet(maintained + suffix).collect()}
-        b = {tuple(map(repr, r))
-             for r in spark.read.parquet(fresh + suffix).collect()}
-        assert a == b, suffix
-    got = ivfpq_index_search(spark, queries, maintained, "vec_id",
-                             "embedding", k=K)
-    want = ivfpq_index_search(spark, queries, fresh, "vec_id",
-                              "embedding", k=K)
-    assert {tuple(r) for r in got.collect()} == \
-        {tuple(r) for r in want.collect()}
-
-
 def test_retrain_staging_crash_window_serves_old_index(spark, tmp_path):
     """Crash-consistency of the retrain swap: everything computes into
     __staged dirs BEFORE any live table moves, so a crash mid-stage
@@ -521,7 +485,7 @@ def test_retrain_staging_crash_window_serves_old_index(spark, tmp_path):
     artifacts; re-running the retrain completes normally (stale __staged
     is simply overwritten)."""
     from furchild_spark.operators.similarity import (
-        sq8_index_build, sq8_index_retrain, sq8_index_search, sq8_train,
+        index_build, index_retrain, index_search, sq8_codec, sq8_train,
     )
 
     emb = spark.read.parquet(
@@ -529,23 +493,24 @@ def test_retrain_staging_crash_window_serves_old_index(spark, tmp_path):
     ).select("vec_id", "embedding")
     base = emb.filter(F.col("vec_id") < 250)
     queries = emb.filter(F.col("vec_id") < 5)
+    codec = sq8_codec()
     path = str(tmp_path / "sq8_crash")
-    sq8_index_build(spark, base, path, "vec_id", "embedding")
-    before = {tuple(r) for r in sq8_index_search(
-        spark, queries, path, "vec_id", "embedding", k=K).collect()}
+    index_build(spark, base, path, codec)
+    before = {tuple(r) for r in index_search(
+        spark, queries, path, codec, k=K).collect()}
 
     # simulate the crash: staged artifacts exist, swap never happened
     sq8_train(emb, "embedding", 64).write.mode("overwrite").parquet(
         path + "__codec__staged")
-    mid = {tuple(r) for r in sq8_index_search(
-        spark, queries, path, "vec_id", "embedding", k=K).collect()}
+    mid = {tuple(r) for r in index_search(
+        spark, queries, path, codec, k=K).collect()}
     assert mid == before  # live index untouched by the staged leftovers
 
-    sq8_index_retrain(spark, emb, path, "vec_id", "embedding")
+    index_retrain(spark, emb, path, codec)
     fresh = str(tmp_path / "sq8_fresh")
-    sq8_index_build(spark, emb, fresh, "vec_id", "embedding")
-    got = {tuple(r) for r in sq8_index_search(
-        spark, queries, path, "vec_id", "embedding", k=K).collect()}
-    want = {tuple(r) for r in sq8_index_search(
-        spark, queries, fresh, "vec_id", "embedding", k=K).collect()}
+    index_build(spark, emb, fresh, codec)
+    got = {tuple(r) for r in index_search(
+        spark, queries, path, codec, k=K).collect()}
+    want = {tuple(r) for r in index_search(
+        spark, queries, fresh, codec, k=K).collect()}
     assert got == want  # retrain over stale __staged completes cleanly

@@ -8,48 +8,18 @@ difference is a failure here too).
 
 from __future__ import annotations
 
-import math
 import os
 
-import duckdb
 import pytest
 
-from furchild_spark.queries import QUERIES
+from furchild_spark.queries import QUERIES, oracle
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 @pytest.fixture(scope="session")
 def ddb():
-    con = duckdb.connect()
-    con.execute("SET TimeZone = 'UTC'")
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
-    return con
-
-
-def _normalize(rows, cols):
-    out = []
-    for row in rows:
-        vals = []
-        for c in cols:
-            v = row[c]
-            if isinstance(v, float):
-                # exact compare, but map -0.0 → 0.0 and NaN → sentinel
-                if math.isnan(v):
-                    v = "NaN"
-                elif v == 0.0:
-                    v = 0.0
-            vals.append((repr(type(v).__name__), repr(v)))
-        out.append(tuple(vals))
-    out.sort()
-    return out
+    return oracle.connect(SF_DIR)
 
 
 # The full 240-entry sweep takes ~1 h on the bench host — beyond the
@@ -85,21 +55,5 @@ def test_query_matches_oracle(spark, ddb, name):
         assert len(spark_rows) >= 0  # rows-only check
         return
 
-    ora = ddb.sql(q.oracle)
-    ora_cols = [d[0] for d in ora.description]
-    assert sorted(cols) == sorted(ora_cols), (
-        f"{name}: column mismatch spark={sorted(cols)} oracle={sorted(ora_cols)}"
-    )
-    ora_rows = [dict(zip(ora_cols, t)) for t in ora.fetchall()]
-    assert len(spark_rows) == len(ora_rows), (
-        f"{name}: row count spark={len(spark_rows)} oracle={len(ora_rows)}"
-    )
-
-    s_norm = _normalize(spark_rows, sorted(cols))
-    o_norm = _normalize(ora_rows, sorted(cols))
-    mismatches = [
-        (i, a, b) for i, (a, b) in enumerate(zip(s_norm, o_norm)) if a != b
-    ]
-    assert not mismatches, (
-        f"{name}: {len(mismatches)} row mismatches; first: {mismatches[0]}"
-    )
+    problem = oracle.mismatch(spark_rows, cols, ddb, q.oracle)
+    assert problem is None, f"{name}: {problem}"

@@ -5,6 +5,7 @@ included; no subprocess, the session is shared)."""
 from __future__ import annotations
 
 import datetime as dt
+import shutil
 
 import pytest
 
@@ -18,6 +19,24 @@ def bronze(tmp_path_factory):
     d = str(tmp_path_factory.mktemp("cli_bronze"))
     assert main(["gen-fixtures", "--bronze", d]) == 0
     return d
+
+
+@pytest.fixture(scope="module")
+def built_wh(bronze, spark, tmp_path_factory):
+    """One full `run` of the DAG into a parquet warehouse, built once per
+    module. Tests that need a built warehouse only as set-up take a copy
+    (:func:`_copy_built`), so none of them sees another's writes."""
+    wh = str(tmp_path_factory.mktemp("cli_built") / "wh")
+    assert main(
+        ["run", "--bronze", bronze, "--warehouse", wh, "--now", FROZEN],
+        spark=spark,
+    ) == 0
+    return wh
+
+
+def _copy_built(built_wh, dst) -> str:
+    shutil.copytree(built_wh, str(dst))
+    return str(dst)
 
 
 def test_ls_lists_models(capsys):
@@ -370,7 +389,7 @@ def test_show_and_freshness_honor_vars(bronze, spark, capsys):
 
 
 def test_docs_catalog_matches_warehouse_and_lineage(
-    bronze, spark, tmp_path, capsys
+    bronze, spark, built_wh, tmp_path, capsys
 ):
     """dbt docs generate with a built warehouse: (1) the artifact's
     node/edge set equals Runner.lineage; (2) the catalog section's
@@ -385,11 +404,7 @@ def test_docs_catalog_matches_warehouse_and_lineage(
     from furchild_spark.engine.registry import Runner
     from furchild_spark.models import registry
 
-    wh = str(tmp_path / "docs_wh")
-    assert main(
-        ["run", "--bronze", bronze, "--warehouse", wh, "--now", FROZEN],
-        spark=spark,
-    ) == 0
+    wh = _copy_built(built_wh, tmp_path / "docs_wh")
     capsys.readouterr()
     out_path = str(tmp_path / "docs.json")
     html_path = str(tmp_path / "catalog.html")
@@ -475,17 +490,13 @@ def test_docs_catalog_txlog_backend(bronze, spark, tmp_path, capsys):
     }
 
 
-def test_defer_to_prod_warehouse(bronze, spark, tmp_path, capsys):
+def test_defer_to_prod_warehouse(bronze, spark, built_wh, tmp_path, capsys):
     """dbt --defer: a dev run of ONE mart against a built prod warehouse
     reads its staging upstreams from prod — the dev warehouse ends up
     holding exactly the selected model, nothing else rebuilt."""
     import os
 
-    prod = str(tmp_path / "prod_wh")
-    assert main(
-        ["run", "--bronze", bronze, "--warehouse", prod, "--now", FROZEN],
-        spark=spark,
-    ) == 0
+    prod = _copy_built(built_wh, tmp_path / "prod_wh")
     capsys.readouterr()
 
     dev = str(tmp_path / "dev_wh")
@@ -713,7 +724,8 @@ def test_run_empty_flag_writes_schemas_not_data(bronze, spark, tmp_path, capsys)
     assert full.count() > 0
 
 
-def test_empty_run_manifest_matches_full_run(bronze, spark, tmp_path, capsys):
+def test_empty_run_manifest_matches_full_run(bronze, spark, built_wh,
+                                             tmp_path, capsys):
     """State-selector fingerprints must be dry-run invariant: an --empty
     run's manifest.json equals a full run's (otherwise every model would
     read state:modified after a CI dry run)."""
@@ -721,11 +733,9 @@ def test_empty_run_manifest_matches_full_run(bronze, spark, tmp_path, capsys):
     import os
 
     wh_e = str(tmp_path / "wh_e")
-    wh_f = str(tmp_path / "wh_f")
     assert main(["run", "--bronze", bronze, "--warehouse", wh_e,
                  "--now", FROZEN, "--empty"], spark=spark) == 0
-    assert main(["run", "--bronze", bronze, "--warehouse", wh_f,
-                 "--now", FROZEN], spark=spark) == 0
+    wh_f = _copy_built(built_wh, tmp_path / "wh_f")
     capsys.readouterr()
     m_e = json.load(open(os.path.join(wh_e, "manifest.json")))
     m_f = json.load(open(os.path.join(wh_f, "manifest.json")))
@@ -833,14 +843,12 @@ def test_at_operator_composes_with_tag_selector(bronze, spark, capsys):
               "--now", FROZEN], spark=spark)
 
 
-def test_known_red_allowlist_gates_exit_code(bronze, spark, tmp_path,
-                                             capsys):
+def test_known_red_allowlist_gates_exit_code(bronze, spark, built_wh,
+                                             tmp_path, capsys):
     """r10 ADVICE: `test --known-red NAME` lets CI gate on UNEXPECTED
     failures only — the deliberate HAS_VAT source-contract red is
     reported (KNOWN-RED) but no longer fails the exit code."""
-    wh = str(tmp_path / "wh_kr")
-    assert main(["run", "--bronze", bronze, "--warehouse", wh,
-                 "--now", FROZEN], spark=spark) == 0
+    wh = _copy_built(built_wh, tmp_path / "wh_kr")
     capsys.readouterr()
     rc = main(
         ["test", "--bronze", bronze, "--warehouse", wh, "--now", FROZEN,
@@ -942,14 +950,13 @@ def test_group_selector(bronze, spark, capsys):
         main(["ls", "--models", "group:nope"])
 
 
-def test_warn_error_flag_promotes_warns(bronze, spark, tmp_path, capsys):
+def test_warn_error_flag_promotes_warns(bronze, spark, built_wh, tmp_path,
+                                        capsys):
     """dbt --warn-error: the fixtures carry warn-severity check failures
     (email shape, country length) that a default `test` reports but
     passes; under --warn-error they fail the suite — and `build
     --warn-error` exits 1 on the same warnings."""
-    wh = str(tmp_path / "wh_we")
-    assert main(["run", "--bronze", bronze, "--warehouse", wh,
-                 "--now", FROZEN], spark=spark) == 0
+    wh = _copy_built(built_wh, tmp_path / "wh_we")
     capsys.readouterr()
     # the default run carries exactly ONE error-severity failure — the
     # honest HAS_VAT source-contract red (see test_build_and_test_green)

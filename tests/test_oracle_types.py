@@ -16,27 +16,18 @@ from the query plan without executing it fully at scale.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-from furchild_spark.queries import QUERIES
+from furchild_spark.queries import QUERIES, oracle
 
 SF = "/root/testdata/sf0.001"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 ALLOWED = {"VARCHAR", "BOOLEAN", "BIGINT", "INTEGER", "DOUBLE",
            "DATE", "TIMESTAMP"}
 
 
 @pytest.fixture(scope="module")
 def con():
-    c = duckdb.connect()
-    c.execute("SET TimeZone = 'UTC'")
-    for t in TABLES:
-        c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    return c
+    return oracle.connect(SF)
 
 
 def test_every_oracle_output_type_is_whitelisted(con):

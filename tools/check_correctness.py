@@ -12,48 +12,21 @@ exact values on rows sorted by all columns. Exit 1 on any mismatch.
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
-
 from furchild_spark.engine.session import get_spark  # noqa: E402
-from furchild_spark.queries import QUERIES  # noqa: E402
+from furchild_spark.queries import QUERIES, oracle  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def normalize(rows, cols):
-    out = []
-    for row in rows:
-        vals = []
-        for c in cols:
-            v = row[c]
-            if isinstance(v, float):
-                if math.isnan(v):
-                    v = "NaN"
-                elif v == 0.0:
-                    v = 0.0
-            vals.append((type(v).__name__, repr(v)))
-        out.append(tuple(vals))
-    out.sort()
-    return out
 
 
 def main() -> int:
     names = sys.argv[1:] or sorted(QUERIES)
     spark = get_spark(app_name="check_correctness", shuffle_partitions=8)
-    con = duckdb.connect()
-    con.execute("SET TimeZone = 'UTC'")
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    con = oracle.connect(SF_DIR)
 
     failures = 0
     for name in names:
@@ -63,23 +36,10 @@ def main() -> int:
         if q.oracle is None:
             print(f"  {name}: rows-only ({len(spark_rows)} rows) — no oracle")
             continue
-        ora = con.sql(q.oracle)
-        ora_cols = [d[0] for d in ora.description]
-        ora_rows = [dict(zip(ora_cols, t)) for t in ora.fetchall()]
-        problems = []
-        if sorted(sdf.columns) != sorted(ora_cols):
-            problems.append(f"cols spark={sorted(sdf.columns)} oracle={sorted(ora_cols)}")
-        elif len(spark_rows) != len(ora_rows):
-            problems.append(f"rows spark={len(spark_rows)} oracle={len(ora_rows)}")
-        else:
-            cols = sorted(sdf.columns)
-            s_n, o_n = normalize(spark_rows, cols), normalize(ora_rows, cols)
-            bad = [(a, b) for a, b in zip(s_n, o_n) if a != b]
-            if bad:
-                problems.append(f"{len(bad)} value mismatches; first: {bad[0]}")
-        if problems:
+        problem = oracle.mismatch(spark_rows, sdf.columns, con, q.oracle)
+        if problem:
             failures += 1
-            print(f"✗ {name}: {problems[0]}")
+            print(f"✗ {name}: {problem}")
         else:
             print(f"✓ {name} ({len(spark_rows)} rows)")
     print(f"\n{len(names) - failures}/{len(names)} green")

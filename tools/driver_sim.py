@@ -20,10 +20,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def main() -> None:
@@ -33,9 +29,8 @@ def main() -> None:
     ap.add_argument("--default-conf", action="store_true")
     args = ap.parse_args()
 
-    import duckdb
-
     import __spark_entry__ as entrymod
+    from furchild_spark.queries import oracle
 
     if args.default_conf:
         from pyspark.sql import SparkSession
@@ -53,10 +48,7 @@ def main() -> None:
 
         spark = get_spark(app_name="driver_sim")
 
-    con = duckdb.connect()
-    con.execute("SET TimeZone = 'UTC'")
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    con = oracle.connect(SF_DIR)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
