@@ -42,6 +42,19 @@ via per-app batch watermarks committed atomically with their data
 pattern), and small-file compaction as a pure physical commit
 (:meth:`TxTable.compact`).
 
+Every write commits through ONE loop (``TxTable._commit_loop``): read the
+head version, ask the operation's plan for the next manifest (or for
+nothing to commit), claim ``head + 1`` with ``_commit`` and, on a lost
+race, re-plan against the winner's head — up to ``_COMMIT_RETRIES``
+times. The plans differ only in what they put in the manifest: an
+add-only commit (``append``, ``stream_append`` and both
+``format("txlog")`` writers) carries the head's files and adds its own;
+merge, replace, delete, compact, optimize and transform rewrite what they
+touch; overwrite and restore ignore the head. The streaming watermark
+check ("batch id at or below ``last_txn`` commits nothing") lives in the
+loop too. ``ADD_ONLY_OPS`` names the ops that only add files, which a
+version-offset stream reader can emit without re-emitting rewritten rows.
+
 The Runner reaches this module only through ``engine/store.py``, the one
 place a run's backend is chosen (``Runner(table_format="txlog")``). The
 key-merge core and the ``(col, op, value)`` grammar are shared with the
@@ -52,6 +65,7 @@ parquet backend (:func:`materialize.merge_rows`,
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import hashlib
 import json
 import os
@@ -128,6 +142,16 @@ class NoSuchVersionError(ValueError):
 
 
 _PAD = 20  # zero-padded version numbers sort lexicographically
+
+# A manifest's "op" is one of: overwrite, append, merge, replace, delete,
+# stream_append, stream_merge, compact, transform (or the caller's name,
+# e.g. "snapshot"), optimize, restore, clone. Only these ops keep every
+# file of the version before and add new ones:
+ADD_ONLY_OPS = frozenset({"append", "stream_append"})
+
+# lost commit races a write re-plans on the winner's head before raising;
+# parallel appenders racing for the same versions are the normal case
+_COMMIT_RETRIES = 8
 
 
 class TxTable:
@@ -296,6 +320,62 @@ class TxTable:
                 pass
         return version
 
+    def _commit_loop(self, plan, txn: tuple[str, int] | None = None):
+        """The optimistic-concurrency commit every write goes through:
+        read the head, ask ``plan(base, head)`` (``head`` is the base
+        version's manifest, None for an empty table) for the next
+        manifest, claim ``base + 1`` with :meth:`_commit`, and on a lost
+        race RE-PLAN against the winner's head — a stale file list is
+        never re-committed. A plan that returns anything but a manifest
+        dict commits nothing, and that value is returned.
+
+        ``txn=(app_id, batch_id)`` is the streaming exactly-once
+        watermark: a batch at or below the head's watermark for
+        ``app_id`` returns None without planning (a redelivery), and the
+        committed manifest advances the watermark in the same atomic
+        commit as its data."""
+        for attempt in range(_COMMIT_RETRIES + 1):
+            base = self.current_version()
+            head = self._read_manifest(base) if base else None
+            if txn is not None and head is not None:
+                app_id, batch_id = txn
+                if batch_id <= int(head.get("txns", {}).get(app_id, -1)):
+                    return None  # duplicate delivery — already committed
+            manifest = plan(base, head)
+            if not isinstance(manifest, dict):
+                return manifest
+            if txn is not None:
+                manifest["txns"] = {txn[0]: txn[1]}
+            try:
+                return self._commit(manifest, base)
+            except ConcurrentWriteError:
+                if attempt == _COMMIT_RETRIES:
+                    raise
+
+    def _add_plan(self, schema: StructType, write, op: str,
+                  allow_evolution: bool = False):
+        """Plan of an add-only commit (``append``, ``stream_append`` and
+        both ``format("txlog")`` writers): the head's files carry forward
+        by reference and ``write()``'s ``(file entries, rows)`` are added —
+        O(new data), nothing is rewritten or read. The schema check runs
+        against every head planned on (the winner of a lost race may have
+        changed the table schema) and BEFORE ``write()`` first runs, so a
+        rejected batch lands no data files; ``write()`` runs once and a
+        re-plan re-commits the same files."""
+        written = functools.cache(write)
+
+        def plan(base, head):
+            self._check_append_schema(schema, head, allow_evolution)
+            files, rows = written()
+            return self._manifest_for(
+                None, op,
+                (head["files"] if head else []) + files,
+                (head["num_rows"] if head else 0) + rows,
+                schema=self._evolved_schema(schema, head),
+            )
+
+        return plan
+
     def _write_data(self, df: DataFrame) -> tuple[list[dict], int]:
         """Write ``df`` as immutable parquet files under a fresh commit
         dir; returns (file entries, row count). The files are invisible
@@ -362,24 +442,25 @@ class TxTable:
                     f"(rows per constraint: {bad}); write aborted, no "
                     "version committed"
                 )
-        entries = []
-        total_rows = 0
-        for name in sorted(os.listdir(out_dir)):
-            if not name.endswith(".parquet"):
-                continue
-            abspath = os.path.join(out_dir, name)
-            stats, rows = self._footer_stats(abspath)
-            total_rows += rows
-            entry = {
-                "path": os.path.join("data", commit_id, name),
-                "rows": rows,
-                "stats": stats,
-            }
-            bloom = self._bloom_for(abspath)
-            if bloom:
-                entry["bloom"] = bloom
-            entries.append(entry)
-        return entries, total_rows
+        entries = [
+            self._file_entry(os.path.join("data", commit_id, name))
+            for name in sorted(os.listdir(out_dir))
+            if name.endswith(".parquet")
+        ]
+        return entries, sum(e["rows"] for e in entries)
+
+    def _file_entry(self, rel_path: str) -> dict:
+        """Manifest entry for one written data file: table-relative path,
+        row count and footer stats, plus bloom bitsets for ``bloom_cols``.
+        ``_write_data`` and the ``format("txlog")`` writer's tasks both
+        describe their files with it."""
+        abspath = os.path.join(self.path, rel_path)
+        stats, rows = self._footer_stats(abspath)
+        entry = {"path": rel_path, "rows": rows, "stats": stats}
+        bloom = self._bloom_for(abspath)
+        if bloom:
+            entry["bloom"] = bloom
+        return entry
 
     def _zorder_key(self, df: DataFrame):
         """Z-curve key over the cluster columns: each value maps to a
@@ -504,7 +585,12 @@ class TxTable:
         files: list[dict],
         rows: int,
         schema: StructType | None = None,
+        **extra,
     ) -> dict:
+        """The one manifest layout (``_commit`` adds the version, base
+        version and txns). ``schema`` defaults to ``df``'s; ``extra`` keys
+        (``restored_from``, ``cloned_from``, a source's ``cluster_by``)
+        are added or override."""
         return {
             "op": op,
             "files": files,
@@ -512,20 +598,22 @@ class TxTable:
             "num_rows": rows,
             "schema": (schema or df.schema).jsonValue(),
             "cluster_by": list(self.cluster_by),
+            **extra,
         }
 
-    def _evolved_schema(self, df: DataFrame, base: int) -> StructType:
+    @staticmethod
+    def _evolved_schema(schema: StructType, head: dict | None) -> StructType:
         """append_new_columns evolution (the reference's on_schema_change
         policy): existing columns keep their type and order, genuinely new
         columns append at the end. Old data files simply lack the new
         columns — the explicit-schema snapshot read fills them with null,
         no rewrite of history."""
-        if base == 0:
-            return df.schema
-        old = StructType.fromJson(self._read_manifest(base)["schema"])
+        if head is None:
+            return schema
+        old = StructType.fromJson(head["schema"])
         have = {f.name for f in old.fields}
         return StructType(
-            list(old.fields) + [f for f in df.schema.fields if f.name not in have]
+            list(old.fields) + [f for f in schema.fields if f.name not in have]
         )
 
     # -- reads -------------------------------------------------------------
@@ -604,25 +692,18 @@ class TxTable:
 
     # -- writes ------------------------------------------------------------
 
-    def overwrite(self, df: DataFrame, max_retries: int = 3) -> int:
+    def overwrite(self, df: DataFrame) -> int:
         """Replace the table contents (version N+1 = exactly ``df``).
 
         Losing a commit race costs only a manifest re-claim: the data
         files are already on disk and an overwrite does not depend on the
-        base contents, so the retry re-reads the new head version and
-        re-commits the same file list."""
+        base contents, so the re-plan re-commits the same file list."""
         files, rows = self._write_data(df)
-        manifest = self._manifest_for(df, "overwrite", files, rows)
-        for attempt in range(max_retries + 1):
-            try:
-                return self._commit(dict(manifest), self.current_version())
-            except ConcurrentWriteError:
-                if attempt == max_retries:
-                    raise
+        return self._commit_loop(
+            lambda base, head: self._manifest_for(df, "overwrite", files, rows)
+        )
 
-    def append(
-        self, df: DataFrame, allow_evolution: bool = False, max_retries: int = 8
-    ) -> int:
+    def append(self, df: DataFrame, allow_evolution: bool = False) -> int:
         """Add rows (version N+1 = version N plus ``df``). O(1) in table
         size: the new manifest is the old file list + the new files —
         nothing is rewritten or even read.
@@ -631,47 +712,27 @@ class TxTable:
         raises unless ``allow_evolution`` — then new columns append to the
         table schema (append_new_columns) and HISTORY is untouched: old
         files lack the column and read as null under the explicit-schema
-        snapshot. Dropping columns is never implicit."""
-        # plan-level pre-flight BEFORE data files land: a mismatched batch
-        # raises here with zero bytes written, instead of leaving orphan
-        # files under data/<commit_id> (r6 ADVICE). The in-loop re-check
-        # below stays — a lost race may have evolved the head schema.
-        base0 = self.current_version()
-        self._check_append_schema(
-            df, self._read_manifest(base0) if base0 else None, allow_evolution
-        )
-        files, rows = self._write_data(df)
-        for attempt in range(max_retries + 1):
-            # concurrent appenders are the NORMAL case for parallel ingest:
-            # a loser re-reads the new head and re-commits the same already-
-            # written data files against it — no data rewrite, O(1) retry.
-            # Schema discipline is validated INSIDE the loop: the winner of
-            # a lost race may have changed the table schema, and re-running
-            # the check against the new head is what keeps "dropping
-            # columns is never implicit" true under concurrency.
-            base = self.current_version()
-            m = self._read_manifest(base) if base else None
-            self._check_append_schema(df, m, allow_evolution)
-            schema = self._evolved_schema(df, base)
-            prior_files = m["files"] if m else []
-            prior_rows = m["num_rows"] if m else 0
-            manifest = self._manifest_for(
-                df, "append", prior_files + files, prior_rows + rows, schema=schema
-            )
-            try:
-                return self._commit(manifest, base)
-            except ConcurrentWriteError:
-                if attempt == max_retries:
-                    raise
+        snapshot. Dropping columns is never implicit.
+
+        Concurrent appenders are the NORMAL case for parallel ingest: a
+        loser re-commits its already-written files on the new head — no
+        data rewrite, O(1) retry."""
+        return self._commit_loop(self._add_plan(
+            df.schema, lambda: self._write_data(df), "append", allow_evolution
+        ))
 
     def _check_append_schema(
-        self, df: DataFrame, base_manifest: dict | None, allow_evolution: bool
+        self, schema: StructType, head: dict | None, allow_evolution: bool
     ) -> None:
-        if base_manifest is None:
+        """Reject a batch of ``schema`` that would narrow or retype the
+        head's columns, or widen them without ``allow_evolution``. The
+        one check every write that adds rows to an existing head runs,
+        ``format("txlog")`` writers included."""
+        if head is None:
             return
-        old = StructType.fromJson(base_manifest["schema"])
-        missing = {f.name for f in old.fields} - {f.name for f in df.schema.fields}
-        new = {f.name for f in df.schema.fields} - {f.name for f in old.fields}
+        old = StructType.fromJson(head["schema"])
+        missing = {f.name for f in old.fields} - {f.name for f in schema.fields}
+        new = {f.name for f in schema.fields} - {f.name for f in old.fields}
         if missing or (new and not allow_evolution):
             raise ValueError(
                 f"{self.path}: append schema mismatch (missing={sorted(missing)}, "
@@ -683,7 +744,7 @@ class TxTable:
         old_types = {f.name: f.dataType for f in old.fields}
         retyped = sorted(
             f.name
-            for f in df.schema.fields
+            for f in schema.fields
             if f.name in old_types and f.dataType != old_types[f.name]
         )
         if retyped:
@@ -696,7 +757,6 @@ class TxTable:
         self,
         updates: DataFrame,
         key_cols: list[str],
-        max_retries: int = 3,
         scope_col: str | None = None,
         allow_evolution: bool = False,
         predicates=(),
@@ -736,36 +796,40 @@ class TxTable:
         Composes with ``scope_col`` (a file must pass both pruners to be
         touched).
         """
-        for attempt in range(max_retries + 1):
-            base = self.current_version()
-            if base == 0:
+        return self._commit_loop(self._merge_plan(
+            updates, key_cols, scope_col, "merge", allow_evolution, predicates
+        ))
+
+    def _merge_plan(self, updates: DataFrame, key_cols: list[str],
+                    scope_col: str | None, op: str,
+                    allow_evolution: bool = False, predicates=()):
+        """Plan of a key merge (``merge`` and the ``stream_merge`` branch of
+        :meth:`write_stream_batch`); an empty table takes ``updates`` as
+        is. Evolution: new columns append, survivors read null for them;
+        a replaced row's unspecified columns become null (delete+insert
+        semantics, as in the reference's MERGE)."""
+
+        def plan(base, head):
+            if head is None:
                 files, rows = self._write_data(updates)
-                manifest = self._manifest_for(updates, "merge", files, rows)
             else:
-                # evolution: new columns appended, survivors read null for
-                # them; a replaced row's unspecified columns become null
-                # (delete+insert semantics, as in the reference's MERGE)
                 files, rows = self._scoped_merge_files(
-                    updates, key_cols, scope_col, base, allow_evolution,
+                    updates, key_cols, scope_col, head, allow_evolution,
                     predicates=predicates,
                 )
-                manifest = self._manifest_for(
-                    updates, "merge", files, rows,
-                    schema=self._evolved_schema(updates, base),
-                )
-            try:
-                return self._commit(manifest, base)
-            except ConcurrentWriteError:
-                if attempt == max_retries:
-                    raise
-                # lost the race: recompute against the winner's snapshot
+            return self._manifest_for(
+                None, op, files, rows,
+                schema=self._evolved_schema(updates.schema, head),
+            )
+
+        return plan
 
     def _scoped_merge_files(
         self,
         updates: DataFrame,
         key_cols: list[str],
         scope_col: str | None,
-        base: int,
+        m: dict,
         allow_evolution: bool = False,
         predicates=(),
     ) -> tuple[list[dict], int]:
@@ -776,7 +840,6 @@ class TxTable:
         set) and the static ``predicates`` window (when given); with
         neither, every file is touched and this is the plain
         whole-table merge."""
-        m = self._read_manifest(base)
         values = (
             [r[0] for r in mat.collect_scope_values(
                 updates, scope_col, "txlog scoped merge"
@@ -812,68 +875,56 @@ class TxTable:
         carried_rows = sum(e["rows"] for e in carried)
         return carried + new_files, carried_rows + new_rows
 
-    def _replace(
-        self, df: DataFrame | None, match_entry, keep_pred, max_retries: int
-    ) -> int:
+    def _replace(self, df: DataFrame | None, match_entry, keep_pred) -> int:
         """Shared core of :meth:`replace_scope` / :meth:`replace_where` /
         :meth:`delete`: ONE atomic commit in which files that may hold
         replaced rows are rewritten with ``keep_pred`` applied, files
-        proven untouched carry forward by reference, and ``df``'s
-        (already-written) files are added. The delete and the insert land
-        in the same manifest — a concurrent reader never sees the slice
-        half-gone. ``df=None`` is a pure delete: nothing is added, and
-        when no file may match, no version is committed."""
-        files_new, rows_new = [], 0
-        if df is not None:
-            # validate the batch schema BEFORE writing its data files, so
-            # a mismatch can't strand orphans under data/<commit_id> (r6
-            # ADVICE; mirrors append()'s pre-flight)
-            base0 = self.current_version()
-            if base0:
-                self._check_append_schema(df, self._read_manifest(base0), False)
-            files_new, rows_new = self._write_data(df)
+        proven untouched carry forward by reference, and ``df``'s files
+        are added. The delete and the insert land in the same manifest —
+        a concurrent reader never sees the slice half-gone. ``df=None`` is
+        a pure delete: nothing is added, and when no file may match, no
+        version is committed. ``df``'s schema is checked BEFORE its files
+        are written (a mismatch strands no orphans under
+        data/<commit_id>), and they are written once, however many times
+        a lost race re-plans."""
         op = "replace" if df is not None else "delete"
-        for attempt in range(max_retries + 1):
-            base = self.current_version()
-            if base == 0:
-                if df is None:
-                    raise NoSuchVersionError(f"{self.path}: table has no commits")
-                manifest = self._manifest_for(df, op, files_new, rows_new)
-            else:
-                m = self._read_manifest(base)
-                if df is not None:
-                    self._check_append_schema(df, m, False)
-                schema = StructType.fromJson(m["schema"])
-                touched, carried = [], []
-                for e in m["files"]:
-                    (touched if match_entry(e) else carried).append(e)
-                if df is None and not touched:
-                    # stats/bloom prove no row matches: deleting nothing
-                    # is a no-op, not a new (identical) version
-                    return base
-                files = list(carried)
-                rows = sum(e["rows"] for e in carried)
-                if touched:
-                    kept = (
-                        self.spark.read.schema(schema)
-                        .parquet(*[self._abs(e["path"]) for e in touched])
-                        .filter(keep_pred)
-                    )
-                    kept_files, kept_rows = self._write_data(kept)
-                    files += kept_files
-                    rows += kept_rows
-                files += files_new
-                rows += rows_new
-                manifest = self._manifest_for(
-                    df, op, files, rows, schema=schema
-                )
-            try:
-                return self._commit(manifest, base)
-            except ConcurrentWriteError:
-                if attempt == max_retries:
-                    raise
+        written = functools.cache(lambda: self._write_data(df))
 
-    def replace_scope(self, df: DataFrame, scope_col: str, max_retries: int = 3) -> int:
+        def plan(base, head):
+            if head is None and df is None:
+                raise NoSuchVersionError(f"{self.path}: table has no commits")
+            files_new, rows_new = [], 0
+            if df is not None:
+                self._check_append_schema(df.schema, head, False)
+                files_new, rows_new = written()
+            if head is None:
+                return self._manifest_for(df, op, files_new, rows_new)
+            schema = StructType.fromJson(head["schema"])
+            touched, carried = [], []
+            for e in head["files"]:
+                (touched if match_entry(e) else carried).append(e)
+            if df is None and not touched:
+                # stats/bloom prove no row matches: deleting nothing
+                # is a no-op, not a new (identical) version
+                return base
+            files = list(carried)
+            rows = sum(e["rows"] for e in carried)
+            if touched:
+                kept = (
+                    self.spark.read.schema(schema)
+                    .parquet(*[self._abs(e["path"]) for e in touched])
+                    .filter(keep_pred)
+                )
+                kept_files, kept_rows = self._write_data(kept)
+                files += kept_files
+                rows += kept_rows
+            return self._manifest_for(
+                df, op, files + files_new, rows + rows_new, schema=schema
+            )
+
+        return self._commit_loop(plan)
+
+    def replace_scope(self, df: DataFrame, scope_col: str) -> int:
         """Dynamic-partition overwrite (dbt ``insert_overwrite``) as ONE
         atomic commit: every row whose ``scope_col`` value appears in
         ``df`` is replaced by ``df``'s rows; all other rows survive.
@@ -910,9 +961,9 @@ class TxTable:
         if has_null:
             drop = drop | F.col(scope_col).isNull()
         keep = ~F.coalesce(drop, F.lit(False))
-        return self._replace(df, match, keep, max_retries)
+        return self._replace(df, match, keep)
 
-    def replace_where(self, df: DataFrame, where, max_retries: int = 3) -> int:
+    def replace_where(self, df: DataFrame, where) -> int:
         """Slice replacement: rows satisfying ALL ``where`` predicates
         (``(col, op, value)`` triples, the :meth:`snapshot` grammar) are
         deleted and ``df`` inserted, one atomic commit — the microbatch
@@ -927,11 +978,9 @@ class TxTable:
                 "predicate; for full replacement use overwrite()"
             )
         keep = ~F.coalesce(mat.predicates_expr(where), F.lit(False))
-        return self._replace(
-            df, lambda e: self._file_may_match(e, where), keep, max_retries
-        )
+        return self._replace(df, lambda e: self._file_may_match(e, where), keep)
 
-    def delete(self, where, max_retries: int = 3) -> int:
+    def delete(self, where) -> int:
         """``DELETE FROM ... WHERE`` — rows satisfying ALL ``where``
         predicates (``(col, op, value)`` triples, the :meth:`snapshot`
         grammar) are removed in one atomic commit.
@@ -949,9 +998,7 @@ class TxTable:
                 "to empty the table, overwrite() with an empty DataFrame"
             )
         keep = ~F.coalesce(mat.predicates_expr(where), F.lit(False))
-        return self._replace(
-            None, lambda e: self._file_may_match(e, where), keep, max_retries
-        )
+        return self._replace(None, lambda e: self._file_may_match(e, where), keep)
 
     def table_changes(self, from_version: int, to_version: int | None = None):
         """Change data feed between two versions: the logical row-level
@@ -1064,7 +1111,6 @@ class TxTable:
         batch_id: int,
         key_cols: list[str] | None = None,
         scope_col: str | None = None,
-        max_retries: int = 3,
     ) -> int | None:
         """Idempotent micro-batch commit — the Delta ``txnAppId/txnVersion``
         pattern for exactly-once ``foreachBatch`` sinks.
@@ -1080,47 +1126,24 @@ class TxTable:
 
         With ``key_cols`` the batch is applied as a merge (upsert) instead
         of an append; ``scope_col`` opts into the file-scoped merge path.
+        The first batch of an empty table is always a ``stream_append``.
         """
-        for attempt in range(max_retries + 1):
-            if batch_id <= self.last_txn(app_id):
-                return None  # duplicate delivery — already committed
-            base = self.current_version()
-            if key_cols is None or base == 0:
-                # same schema discipline as append(): a batch missing table
-                # columns must NOT become the head schema — that would
-                # silently drop the columns from every read of old files
-                m = self._read_manifest(base) if base else None
-                self._check_append_schema(batch_df, m, allow_evolution=False)
-                files, rows = self._write_data(batch_df)
-                manifest = self._manifest_for(
-                    batch_df,
-                    "stream_append",
-                    (m["files"] if m else []) + files,
-                    (m["num_rows"] if m else 0) + rows,
-                    schema=self._evolved_schema(batch_df, base),
-                )
-            else:
-                # same schema discipline as the other paths: without it a
-                # batch missing a table column (touching zero files) would
-                # commit a NARROWED head schema and silently drop the
-                # column from every read of carried files
-                m = self._read_manifest(base)
-                self._check_append_schema(batch_df, m, allow_evolution=False)
-                files, rows = self._scoped_merge_files(
-                    batch_df, key_cols, scope_col, base
-                )
-                manifest = self._manifest_for(
-                    batch_df, "stream_merge", files, rows,
-                    schema=self._evolved_schema(batch_df, base),
-                )
-            manifest["txns"] = {app_id: batch_id}
-            try:
-                return self._commit(manifest, base)
-            except ConcurrentWriteError:
-                if attempt == max_retries:
-                    raise
-                # a competing writer advanced the log; the duplicate check
-                # at the top of the loop re-reads the new watermark
+        add = self._add_plan(
+            batch_df.schema, lambda: self._write_data(batch_df), "stream_append"
+        )
+        merge = self._merge_plan(batch_df, key_cols, scope_col, "stream_merge")
+
+        def plan(base, head):
+            if key_cols is None or head is None:
+                return add(base, head)
+            # same schema discipline as append(): without it a batch
+            # missing a table column (touching zero files) would commit a
+            # NARROWED head schema and silently drop the column from
+            # every read of carried files
+            self._check_append_schema(batch_df.schema, head, False)
+            return merge(base, head)
+
+        return self._commit_loop(plan, txn=(app_id, batch_id))
 
     def foreach_batch_sink(
         self,
@@ -1162,9 +1185,7 @@ class TxTable:
 
     # -- compaction --------------------------------------------------------
 
-    def compact(
-        self, small_file_bytes: int = 32 * 1024 * 1024, max_retries: int = 3
-    ) -> int | None:
+    def compact(self, small_file_bytes: int = 32 * 1024 * 1024) -> int | None:
         """Rewrite files smaller than ``small_file_bytes`` into fewer,
         clustered files; larger files are carried forward by reference.
         Contents are bit-identical before and after — compaction is a pure
@@ -1177,36 +1198,30 @@ class TxTable:
         (the stale small/carried split would drop the racer's files):
         compaction's motivating scenario is a live streaming appender, so
         losing the race is the expected case, not the exception."""
-        for attempt in range(max_retries + 1):
-            base = self.current_version()
-            if base == 0:
+
+        def plan(base, head):
+            if head is None:
                 return None
-            m = self._read_manifest(base)
             small, carried = [], []
-            for e in m["files"]:
+            for e in head["files"]:
                 size = os.path.getsize(self._abs(e["path"]))
                 (small if size < small_file_bytes else carried).append(e)
             if len(small) < 2:
                 return None
-            schema = StructType.fromJson(m["schema"])
+            schema = StructType.fromJson(head["schema"])
             paths = [self._abs(e["path"]) for e in small]
             compacted_df = self.spark.read.schema(schema).parquet(*paths)
             if not self.cluster_by:
                 compacted_df = compacted_df.coalesce(1)
             files, rows = self._write_data(compacted_df)
             carried_rows = sum(e["rows"] for e in carried)
-            manifest = self._manifest_for(
+            return self._manifest_for(
                 compacted_df, "compact", carried + files, carried_rows + rows
             )
-            try:
-                return self._commit(manifest, base)
-            except ConcurrentWriteError:
-                if attempt == max_retries:
-                    raise
 
-    def transform(
-        self, fn, op: str = "transform", max_retries: int = 3
-    ) -> int:
+        return self._commit_loop(plan)
+
+    def transform(self, fn, op: str = "transform") -> int:
         """Atomic read-modify-write with compare-and-swap retry:
         ``fn(current_snapshot_or_None) -> new_df`` computes the
         replacement table, and the commit is validated against the exact
@@ -1215,20 +1230,15 @@ class TxTable:
         a stale result (which would silently drop the winner's rows, the
         failure a plain ``overwrite()`` retry allows). The primitive the
         Runner's SCD2-on-txlog path builds on."""
-        for attempt in range(max_retries + 1):
-            base = self.current_version()
-            current = self.snapshot(base) if base else None
-            new_df = fn(current)
-            files, rows = self._write_data(new_df)
-            manifest = self._manifest_for(new_df, op, files, rows)
-            try:
-                return self._commit(manifest, base)
-            except ConcurrentWriteError:
-                if attempt == max_retries:
-                    raise
-                # recompute from the winner's snapshot on the next loop
 
-    def optimize(self, max_retries: int = 3) -> int:
+        def plan(base, head):
+            new_df = fn(self.snapshot(base) if base else None)
+            files, rows = self._write_data(new_df)
+            return self._manifest_for(new_df, op, files, rows)
+
+        return self._commit_loop(plan)
+
+    def optimize(self) -> int:
         """Full physical re-layout (``OPTIMIZE`` / ``OPTIMIZE ZORDER``):
         every data file is rewritten through the CURRENT layout policy
         (cluster_by range clustering, or the Z-curve when ``zorder``) in
@@ -1236,28 +1246,24 @@ class TxTable:
         the previous version see no logical change. Use after layout
         policy changes or heavy merge/delete churn has fragmented the
         clustering that file skipping depends on."""
-        for attempt in range(max_retries + 1):
-            base = self.current_version()
-            if base == 0:
+
+        def plan(base, head):
+            if head is None:
                 raise NoSuchVersionError(f"{self.path}: table has no commits")
-            m = self._read_manifest(base)
-            schema = StructType.fromJson(m["schema"])
+            schema = StructType.fromJson(head["schema"])
             df = self.spark.read.schema(schema).parquet(
-                *[self._abs(e["path"]) for e in m["files"]]
+                *[self._abs(e["path"]) for e in head["files"]]
             )
             files, rows = self._write_data(df)
-            manifest = self._manifest_for(
+            return self._manifest_for(
                 None, "optimize", files, rows, schema=schema
             )
-            try:
-                return self._commit(manifest, base)
-            except ConcurrentWriteError:
-                if attempt == max_retries:
-                    raise
+
+        return self._commit_loop(plan)
 
     # -- restore -----------------------------------------------------------
 
-    def restore(self, version: int, max_retries: int = 3) -> int:
+    def restore(self, version: int) -> int:
         """Re-commit ``version``'s exact file list as the NEW head (the
         Delta RESTORE pattern): a bad write is undone by a forward commit,
         never by mutating history — readers of intermediate versions are
@@ -1266,21 +1272,11 @@ class TxTable:
         (not vacuumed), which is exactly the guarantee vacuum's
         ``retain_last`` exists to configure."""
         m = self._read_manifest(version)  # raises NoSuchVersionError if vacuumed
-        manifest = {
-            "op": "restore",
-            "files": m["files"],
-            "num_files": m["num_files"],
-            "num_rows": m["num_rows"],
-            "schema": m["schema"],
-            "cluster_by": m.get("cluster_by", []),
-            "restored_from": version,
-        }
-        for attempt in range(max_retries + 1):
-            try:
-                return self._commit(dict(manifest), self.current_version())
-            except ConcurrentWriteError:
-                if attempt == max_retries:
-                    raise
+        return self._commit_loop(lambda base, head: self._manifest_for(
+            None, "restore", m["files"], m["num_rows"],
+            schema=StructType.fromJson(m["schema"]),
+            cluster_by=m.get("cluster_by", []), restored_from=version,
+        ))
 
     # -- shallow clone -----------------------------------------------------
 
@@ -1317,14 +1313,11 @@ class TxTable:
         files = [
             dict(e, path=self._abs(e["path"])) for e in m["files"]
         ]
-        manifest = {
-            "op": "clone",
-            "files": files,
-            "num_files": m["num_files"],
-            "num_rows": m["num_rows"],
-            "schema": m["schema"],
-            "cluster_by": m.get("cluster_by", []),
-            "cloned_from": {"path": self.path, "version": base},
-        }
-        target._commit(manifest, 0)
+        # one claim of version 1, no retry: losing it means another
+        # writer created the target table first
+        target._commit(target._manifest_for(
+            None, "clone", files, m["num_rows"],
+            schema=StructType.fromJson(m["schema"]),
+            cloned_from={"path": self.path, "version": base},
+        ), 0)
         return target

@@ -327,23 +327,17 @@ def ivf_topk(
     return ivf_probe_topk(assign, cents, queries, id_col, vec_col, k, nprobe)
 
 
-def ivf_probe_topk(
-    assign: DataFrame,
-    cents: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nprobe: int = 2,
+def _probe_lists(
+    queries: DataFrame, cents: DataFrame, id_col: str, vec_col: str, nprobe: int
 ) -> DataFrame:
-    """The serving half of :func:`ivf_topk`, factored out so a MAINTAINED
-    index (:func:`index_search` reading persisted lists) and the
-    inline build share one probe implementation byte-for-byte."""
+    """One row per (query, probed list) — ``cent_id``, ``query_id``,
+    ``q_q``, ``q_norm`` — for the query's ``nprobe`` nearest centroids in
+    the broadcast one-row array. In-row argsort: sort struct(-sim, cid)
+    asc = sim desc / cid asc, slice the prefix, explode one row per probe.
+    Shared by the IVF-flat and IVF-PQ serve plans."""
     qb = queries.select(
         F.col(id_col).alias("query_id"), quantize(vec_col).alias("q_q")
     ).select("query_id", "q_q", norm_q(F.col("q_q")).alias("q_norm"))
-    # nprobe nearest centroids, in-row: sort struct(-sim, cid) asc = sim
-    # desc / cid asc, slice the prefix, explode to one row per probe
     probe_arr = F.slice(
         F.array_sort(
             F.transform(
@@ -357,7 +351,7 @@ def ivf_probe_topk(
         1,
         nprobe,
     )
-    probes = F.broadcast(
+    return (
         qb.withColumn("__one", F.lit(1))
         .join(F.broadcast(cents), on="__one")
         .select(
@@ -366,6 +360,21 @@ def ivf_probe_topk(
         )
         .select(F.col("__p.cid").alias("cent_id"), "query_id", "q_q", "q_norm")
     )
+
+
+def ivf_probe_topk(
+    assign: DataFrame,
+    cents: DataFrame,
+    queries: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 5,
+    nprobe: int = 2,
+) -> DataFrame:
+    """The serving half of :func:`ivf_topk`, factored out so a MAINTAINED
+    index (:func:`index_search` reading persisted lists) and the
+    inline build share one probe implementation byte-for-byte."""
+    probes = F.broadcast(_probe_lists(queries, cents, id_col, vec_col, nprobe))
     scored = (
         probes.join(assign, on="cent_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -1088,29 +1097,10 @@ def ivfpq_serve(
     inline build share one plan byte-for-byte."""
     sub = dim // subspaces
 
-    # query side: nprobe nearest coarse lists (same in-row argsort as
-    # ivf_topk), then the query residual PER PROBED LIST
-    qb = queries.select(
-        F.col(id_col).alias("query_id"), quantize(vec_col).alias("q_q")
-    ).select("query_id", "q_q", norm_q(F.col("q_q")).alias("q_norm"))
-    probe_arr = F.slice(
-        F.array_sort(
-            F.transform(
-                "__cents",
-                lambda c: F.struct(
-                    (-_sim_to_cent("q_q", "q_norm", c)).alias("negsim"),
-                    c["cid"].alias("cid"),
-                ),
-            )
-        ),
-        1,
-        nprobe,
-    )
+    # query side: nprobe nearest coarse lists (the IVF-flat probe list),
+    # then the query residual PER PROBED LIST
     probes = _residual(
-        qb.withColumn("__one", F.lit(1))
-        .join(F.broadcast(cents), on="__one")
-        .select("query_id", "q_q", F.explode(probe_arr).alias("__p"))
-        .select(F.col("__p.cid").alias("cent_id"), "query_id", "q_q"),
+        _probe_lists(queries, cents, id_col, vec_col, nprobe),
         cents, "q_q", "qr", "cent_id", "query_id",
     )
 

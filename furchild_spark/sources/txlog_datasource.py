@@ -23,9 +23,10 @@ native data source gives the Delta-style UX on public Spark surface
 - ``spark.readStream.format("txlog").load(path)`` — a version-offset
   micro-batch stream (Delta streaming-source parity): each txlog COMMIT
   is an offset; a batch emits exactly the data files ADDED between two
-  versions. Append-only commits stream exactly-once by construction
-  (files are immutable, offsets are durable versions). Non-append
-  commits (merge/replace/delete/overwrite/restore) raise unless
+  versions. Add-only commits (``txlog.ADD_ONLY_OPS``: append and
+  stream_append) stream exactly-once by construction (files are
+  immutable, offsets are durable versions). Other commits
+  (merge/replace/delete/overwrite/restore/stream_merge/...) raise unless
   ``ignoreChanges=true``, which emits newly added files and skips
   removals — dbt/Delta's documented semantics for streaming from a
   mutating table.
@@ -53,56 +54,22 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-# ops whose commit only ADDS data files (safe to stream without
-# ignoreChanges); version 1 is always the table's initial population
-_APPEND_OPS = {"append"}
 
-
-def _manifest_path(table_dir: str, version: int) -> str:
-    from furchild_spark.engine.txlog import _PAD
-
-    return os.path.join(table_dir, "_txlog", f"{version:0{_PAD}d}.json")
-
-
-def _versions(table_dir: str) -> list[int]:
-    log = os.path.join(table_dir, "_txlog")
-    if not os.path.isdir(log):
-        return []
-    out = []
-    for f in os.listdir(log):
-        stem, ext = os.path.splitext(f)
-        if ext == ".json" and stem.isdigit():
-            out.append(int(stem))
-    return sorted(out)
-
-
-def _read_manifest(table_dir: str, version: int) -> dict:
-    with open(_manifest_path(table_dir, version)) as fh:
-        return json.load(fh)
-
-
-def _current_version(table_dir: str) -> int:
-    vs = _versions(table_dir)
-    if not vs:
-        raise ValueError(f"{table_dir}: not a txlog table (no _txlog dir)")
-    return vs[-1]
-
-
-def _abs(table_dir: str, file_path: str) -> str:
-    """TxTable._abs semantics: clone manifests reference the source
-    table's files by absolute path; normal entries are table-relative."""
-    return file_path if os.path.isabs(file_path) else os.path.join(
-        table_dir, file_path
-    )
-
-
-def _file_may_match(entry: dict, predicates) -> bool:
-    """Delegates to the format's own conservative zone-map/bloom
-    skipping (txlog.TxTable._file_may_match) — ONE pruning semantics,
-    whichever door the read comes through."""
+def _table(table_dir: str, stats_cols: tuple[str, ...] = ()):
+    """The format's own :class:`TxTable` over ``table_dir`` — log reads,
+    file skipping, footer stats, bloom and the commit loop are all its.
+    ``spark=None``: only the filesystem/pyarrow half is used. Imported on
+    call, so importing this module does not import the engine package."""
     from furchild_spark.engine.txlog import TxTable
 
-    return TxTable._file_may_match(entry, predicates)
+    return TxTable(None, table_dir, stats_cols=stats_cols)
+
+
+def _head_version(table_dir: str) -> int:
+    v = _table(table_dir).current_version()
+    if v == 0:
+        raise ValueError(f"{table_dir}: not a txlog table (no _txlog dir)")
+    return v
 
 
 def _translate_filters(filters):
@@ -181,7 +148,7 @@ def _read_files_arrow(partition):
 class TxLogReader(DataSourceReader):
     def __init__(self, table_dir: str, version: int):
         self.table_dir = table_dir
-        self.manifest = _read_manifest(table_dir, version)
+        self.manifest = _table(table_dir)._read_manifest(version)
         self.predicates: list = []
 
     def pushFilters(self, filters):
@@ -191,14 +158,17 @@ class TxLogReader(DataSourceReader):
         return filters
 
     def partitions(self):
+        tx = _table(self.table_dir)
         schema_json = json.dumps(self.manifest["schema"])
         entries = self.manifest["files"]
         if self.predicates:
+            # the format's own conservative zone-map/bloom skipping — ONE
+            # pruning semantics, whichever door the read comes through
             entries = [
-                e for e in entries if _file_may_match(e, self.predicates)
+                e for e in entries if tx._file_may_match(e, self.predicates)
             ]
         parts = [
-            _FilesPartition([_abs(self.table_dir, e["path"])], schema_json)
+            _FilesPartition([tx._abs(e["path"])], schema_json)
             for e in entries
         ]
         # an empty table (or fully pruned scan) still needs ≥1 partition
@@ -222,21 +192,23 @@ class TxLogStreamReader(DataSourceStreamReader):
         return {"version": self.start_version}
 
     def latestOffset(self):
-        return {"version": _current_version(self.table_dir)}
+        return {"version": _head_version(self.table_dir)}
 
     def partitions(self, start: dict, end: dict):
+        from furchild_spark.engine.txlog import ADD_ONLY_OPS
+
+        tx = _table(self.table_dir)
         v0, v1 = int(start["version"]), int(end["version"])
         prev_paths: set = set()
         if v0 > 0:
-            prev_paths = {
-                e["path"] for e in _read_manifest(self.table_dir, v0)["files"]
-            }
+            prev_paths = {e["path"] for e in tx._read_manifest(v0)["files"]}
         parts = []
         for v in range(v0 + 1, v1 + 1):
-            m = _read_manifest(self.table_dir, v)
+            m = tx._read_manifest(v)
+            # version 1 is always the table's initial population
             if (
                 v > 1
-                and m["op"] not in _APPEND_OPS
+                and m["op"] not in ADD_ONLY_OPS
                 and not self.ignore_changes
             ):
                 raise ValueError(
@@ -250,15 +222,13 @@ class TxLogStreamReader(DataSourceStreamReader):
             if new:
                 parts.append(
                     _FilesPartition(
-                        [_abs(self.table_dir, p) for p in sorted(new)],
+                        [tx._abs(p) for p in sorted(new)],
                         json.dumps(m["schema"]),
                     )
                 )
             prev_paths = cur
         if not parts:
-            schema = _read_manifest(
-                self.table_dir, max(v1, 1)
-            )["schema"] if _versions(self.table_dir) else {}
+            schema = tx._read_manifest(max(v1, 1))["schema"] if tx.exists() else {}
             parts = [_FilesPartition([], json.dumps(schema))]
         return parts
 
@@ -275,24 +245,34 @@ class _TxWriteMessage(WriterCommitMessage):
         self.rows = rows
 
 
+def _written(messages) -> tuple[list[dict], int]:
+    """(file entries, rows) the tasks of one write reported."""
+    return (
+        [e for m in messages if m for e in m.entries],
+        sum(m.rows for m in messages if m),
+    )
+
+
 class TxLogArrowWriter(DataSourceArrowWriter):
     """``df.write.format("txlog")`` — the write half of the source.
 
     Each executor task streams its Arrow batches into ONE immutable
     parquet file under a fresh ``data/<uuid>/`` dir and returns the
     manifest entry (relative path, row count, footer min/max stats and
-    bloom filter for ``statsCols``) as its commit message; the driver's
-    :meth:`commit` then publishes a manifest through the format's
-    hard-link commit protocol — the same exactly-one-writer-wins
-    arbitration every TxTable write uses, with the same
-    ConcurrentWriteError retry loop. Files from failed/aborted attempts
-    are never referenced by any manifest (and :meth:`abort` unlinks the
-    reported ones), so readers can't see partial writes — vacuum sweeps
-    any orphans a hard crash leaves.
+    bloom filter for ``statsCols``, built by ``TxTable._file_entry``) as
+    its commit message; the driver's :meth:`commit` then publishes a
+    manifest through ``TxTable._commit_loop`` — the one commit loop
+    every TxTable write uses, hard-link claim and re-plan on a lost race
+    included. Files from failed/aborted attempts are never referenced by
+    any manifest (and :meth:`abort` unlinks the reported ones), so
+    readers can't see partial writes — vacuum sweeps any orphans a hard
+    crash leaves.
 
-    ``mode("append")`` carries the prior version's files by reference
-    (O(new data), never a rewrite) and requires the incoming columns to
-    match the table's — schema evolution stays an explicit
+    ``mode("append")`` is TxTable's add-only commit: it carries the
+    prior version's files by reference (O(new data), never a rewrite)
+    and runs ``TxTable.append``'s schema check, so a missing, new or
+    retyped column raises and commits nothing — schema evolution stays an
+    explicit
     ``TxTable.append(allow_evolution=True)`` decision, not a write-path
     default. ``clusterBy`` layout is also TxTable's job (it needs a
     repartition the sink cannot impose); ``statsCols`` still lets an
@@ -306,19 +286,11 @@ class TxLogArrowWriter(DataSourceArrowWriter):
         cols = options.get("statscols", "")
         self.stats_cols = tuple(c.strip() for c in cols.split(",") if c.strip())
 
-    def _tx(self):
-        from furchild_spark.engine.txlog import TxTable
-
-        # spark=None: only the filesystem/pyarrow half of TxTable is
-        # used (footer stats, bloom, manifest commit) — no session needed
-        return TxTable(None, self.table_dir, stats_cols=self.stats_cols)
-
     def write(self, iterator):
         import uuid
 
         import pyarrow.parquet as pq
 
-        tx = self._tx()
         writer = None
         rel = None
         rows = 0
@@ -338,56 +310,22 @@ class TxLogArrowWriter(DataSourceArrowWriter):
         if writer is None:
             return _TxWriteMessage([], 0)  # empty task: nothing to commit
         writer.close()
-        abspath = os.path.join(self.table_dir, rel)
-        stats, n = tx._footer_stats(abspath)
-        entry = {"path": rel, "rows": n, "stats": stats}
-        bloom = tx._bloom_for(abspath)
-        if bloom:
-            entry["bloom"] = bloom
-        return _TxWriteMessage([entry], n)
+        entry = _table(self.table_dir, self.stats_cols)._file_entry(rel)
+        return _TxWriteMessage([entry], entry["rows"])
 
     def commit(self, messages):
-        from furchild_spark.engine.txlog import ConcurrentWriteError
+        tx = _table(self.table_dir)
+        entries, rows = _written(messages)
+        add = tx._add_plan(self.schema, lambda: (entries, rows), "append")
 
-        tx = self._tx()
-        entries = [e for m in messages if m for e in m.entries]
-        rows = sum(m.rows for m in messages if m)
-        for _ in range(3):
-            base = tx.current_version()
-            if self.overwrite or base == 0:
-                files, total, op = entries, rows, "overwrite"
-                schema_json = self.schema.jsonValue()
-            else:
-                prior = tx._read_manifest(base)
-                have = {f["name"] for f in prior["schema"]["fields"]}
-                got = {f.name for f in self.schema.fields}
-                if have != got:
-                    raise ValueError(
-                        f"{self.table_dir}: append schema mismatch "
-                        f"(missing={sorted(have - got)}, "
-                        f"new={sorted(got - have)}); schema evolution is "
-                        "an explicit TxTable.append(allow_evolution=True)"
-                    )
-                files = prior["files"] + entries
-                total = prior["num_rows"] + rows
-                op = "append"
-                schema_json = prior["schema"]
-            manifest = {
-                "op": op,
-                "files": files,
-                "num_files": len(files),
-                "num_rows": total,
-                "schema": schema_json,
-                "cluster_by": [],
-            }
-            try:
-                tx._commit(manifest, base)
-                return
-            except ConcurrentWriteError:
-                continue  # recompute against the new snapshot and retry
-        raise ConcurrentWriteError(
-            f"{self.table_dir}: lost the commit race 3 times"
-        )
+        def plan(base, head):
+            if self.overwrite or head is None:
+                return tx._manifest_for(
+                    None, "overwrite", entries, rows, schema=self.schema
+                )
+            return add(base, head)
+
+        tx._commit_loop(plan)
 
     def abort(self, messages):
         for m in messages:
@@ -404,13 +342,16 @@ class TxLogStreamArrowWriter(DataSourceStreamArrowWriter):
     """``df.writeStream.format("txlog")`` — transactional streaming sink.
 
     Tasks write files exactly like the batch writer (delegated); the
-    driver commits each micro-batch as ONE ``stream_append`` manifest.
-    With ``txnAppId`` set, the manifest records the Delta-style
+    driver commits each micro-batch as ONE ``stream_append`` manifest —
+    TxTable's add-only commit with its schema check — through
+    ``TxTable._commit_loop``. With ``txnAppId`` set, the loop's
+    watermark check applies: the manifest records the Delta-style
     ``{app_id: batch_id}`` watermark IN THE SAME atomic commit as the
     data (txlog's ``write_stream_batch`` contract), so a redelivered
     batch — Structured Streaming's at-least-once failure mode — finds
-    ``batchId <= last_txn`` and commits nothing: exactly-once, with no
-    window where data landed but the watermark didn't. Without
+    ``batchId <= last_txn``, commits nothing and unlinks its files:
+    exactly-once, with no window where data landed but the watermark
+    didn't. Without
     ``txnAppId`` the sink is plain at-least-once append; the option is
     deliberately explicit because a WRONG shared app id across two
     queries would silently drop the second query's batches (the same
@@ -427,56 +368,15 @@ class TxLogStreamArrowWriter(DataSourceStreamArrowWriter):
         return self._w.write(iterator)
 
     def commit(self, messages, batchId):
-        from furchild_spark.engine.txlog import ConcurrentWriteError
-
-        tx = self._w._tx()
-        entries = [e for m in messages if m for e in m.entries]
-        rows = sum(m.rows for m in messages if m)
-        for attempt in range(4):
-            if (
-                self.txn_app_id is not None
-                and batchId <= tx.last_txn(self.txn_app_id)
-            ):
-                # duplicate delivery: the batch is already inside a
-                # committed manifest — drop OUR files (they are fresh
-                # duplicates nothing references) and do nothing
-                self._w.abort(messages)
-                return
-            base = tx.current_version()
-            if base:
-                prior = tx._read_manifest(base)
-                have = {f["name"] for f in prior["schema"]["fields"]}
-                got = {f.name for f in self.schema.fields}
-                if have != got:
-                    raise ValueError(
-                        f"{self.table_dir}: stream batch schema mismatch "
-                        f"(missing={sorted(have - got)}, "
-                        f"new={sorted(got - have)})"
-                    )
-                files = prior["files"] + entries
-                total = prior["num_rows"] + rows
-                schema_json = prior["schema"]
-            else:
-                files, total = entries, rows
-                schema_json = self.schema.jsonValue()
-            manifest = {
-                "op": "stream_append",
-                "files": files,
-                "num_files": len(files),
-                "num_rows": total,
-                "schema": schema_json,
-                "cluster_by": [],
-            }
-            if self.txn_app_id is not None:
-                manifest["txns"] = {self.txn_app_id: batchId}
-            try:
-                tx._commit(manifest, base)
-                return
-            except ConcurrentWriteError:
-                if attempt == 3:
-                    raise
-                # competing writer advanced the log: re-read watermark
-                # and prior files, retry
+        tx = _table(self.table_dir)
+        entries, rows = _written(messages)
+        txn = None if self.txn_app_id is None else (self.txn_app_id, batchId)
+        add = tx._add_plan(self.schema, lambda: (entries, rows), "stream_append")
+        if tx._commit_loop(add, txn) is None:
+            # duplicate delivery: the batch is already inside a committed
+            # manifest — drop OUR files (fresh duplicates nothing
+            # references)
+            self._w.abort(messages)
 
     def abort(self, messages, batchId):
         self._w.abort(messages)
@@ -499,11 +399,11 @@ class TxLogDataSource(DataSource):
 
     def _batch_version(self) -> int:
         v = self.options.get("versionasof")
-        return int(v) if v is not None else _current_version(self._table_dir())
+        return int(v) if v is not None else _head_version(self._table_dir())
 
     def schema(self):
         return _nullable(StructType.fromJson(
-            _read_manifest(self._table_dir(), self._batch_version())["schema"]
+            _table(self._table_dir())._read_manifest(self._batch_version())["schema"]
         ))
 
     def reader(self, schema):

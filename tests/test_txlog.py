@@ -7,8 +7,8 @@ Property checklist:
 - a snapshot keeps returning ITS version's rows while later commits land
   (snapshot isolation / time travel);
 - exactly one of two writers racing for a version wins (optimistic
-  concurrency via the hard-link claim), and merge() retries onto the
-  winner's snapshot;
+  concurrency via the hard-link claim), and every re-planning write
+  retries onto the winner's snapshot;
 - append is O(1) — it reuses the prior manifest's files untouched;
 - vacuum removes only unreferenced commit dirs and expired manifests,
   leaving retained snapshots readable.
@@ -21,6 +21,7 @@ import tempfile
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from furchild_spark.engine.txlog import (
     ConcurrentWriteError,
@@ -99,11 +100,48 @@ def test_exactly_one_writer_wins_a_version(spark, tmp_table):
         t._commit(dict(m), base)
 
 
-def test_merge_retries_onto_winners_snapshot(spark, tmp_table):
+_RACED_OPS = {
+    # op -> (call on the table, committed op name, {k: v} afterwards);
+    # the competing append always lands keys 50, 51 with v="w"
+    "merge": (
+        lambda t, df: t.merge(df([Row(k=0, v="b")]), ["k"]),
+        "merge", {0: "b", 1: "a", 2: "a", 3: "a"},
+    ),
+    "append": (
+        lambda t, df: t.append(df([Row(k=9, v="b")])),
+        "append", {0: "a", 1: "a", 2: "a", 3: "a", 9: "b"},
+    ),
+    "replace_where": (
+        lambda t, df: t.replace_where(df([Row(k=1, v="b")]), [("k", "==", 1)]),
+        "replace", {0: "a", 1: "b", 2: "a", 3: "a"},
+    ),
+    "delete": (
+        lambda t, df: t.delete([("k", "==", 0)]),
+        "delete", {1: "a", 2: "a", 3: "a"},
+    ),
+    "write_stream_batch": (
+        lambda t, df: t.write_stream_batch(df([Row(k=9, v="b")]), "app", 0),
+        "stream_append", {0: "a", 1: "a", 2: "a", 3: "a", 9: "b"},
+    ),
+    "compact": (
+        lambda t, df: t.compact(),
+        "compact", {0: "a", 1: "a", 2: "a", 3: "a"},
+    ),
+    "transform": (
+        lambda t, df: t.transform(lambda cur: cur.withColumn("v", F.upper("v"))),
+        "transform", {0: "A", 1: "A", 2: "A", 3: "A", 50: "W", 51: "W"},
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(_RACED_OPS))
+def test_write_retries_onto_winners_snapshot(spark, tmp_table, op):
+    call, op_name, want = _RACED_OPS[op]
     t = tmp_table
-    t.overwrite(spark.createDataFrame(_rows(4)))
-    # interleave: a competing writer lands version 2 between our merge's
-    # snapshot read and its commit — simulated by wrapping _commit to
+    # two base files, so compact has small files to fold
+    t.overwrite(spark.createDataFrame(_rows(4)).repartition(2))
+    # interleave: a competing writer lands version 2 between our op's
+    # head read and its commit — simulated by wrapping _commit to
     # inject one conflict
     real_commit = t._commit
     state = {"injected": False}
@@ -117,12 +155,15 @@ def test_merge_retries_onto_winners_snapshot(spark, tmp_table):
         return real_commit(manifest, base_version)
 
     t._commit = racing_commit
-    t.merge(spark.createDataFrame([Row(k=0, v="b")]), ["k"])
+    call(t, spark.createDataFrame)
     t._commit = real_commit
+    # our op lost version 2 and re-planned onto the winner's head
+    assert [h["op"] for h in t.history()] == ["overwrite", "append", op_name]
+    # both the competing append and our op's effect survived
     got = {r["k"]: r["v"] for r in t.snapshot().collect()}
-    # both the competing append (keys 50,51) and our merge survived
-    assert got[0] == "b" and got[50] == "w" and got[51] == "w"
-    assert len(got) == 6
+    assert got == {50: "w", 51: "w", **want}
+    if op == "compact":
+        assert t.history()[-1]["num_files"] == 1
 
 
 def test_append_is_o1_reuses_prior_files(spark, tmp_table):

@@ -214,6 +214,35 @@ def test_write_append_schema_mismatch_is_loud(registered, sf_dir, tmp_path):
     with pytest.raises(Exception, match="append schema mismatch"):
         (orders.limit(2).drop("o_orderpriority")
          .write.format("txlog").mode("append").save(path))
+    # a same-name column with another type commits nothing: accepted, it
+    # would leave a version no reader can decode
+    tx = TxTable(spark, path)
+    with pytest.raises(Exception, match="column type change not allowed"):
+        (orders.limit(2)
+         .withColumn("o_orderkey", F.concat(F.lit("k"), "o_orderkey"))
+         .write.format("txlog").mode("append").save(path))
+    assert tx.current_version() == 1
+    assert len(tx.snapshot().collect()) == orders.count()
+    assert len(spark.read.format("txlog").load(path).collect()) == orders.count()
+
+
+def test_stream_reads_table_fed_by_streaming_sink(registered, tmp_path):
+    """stream_append commits only add files: a table fed by
+    write_stream_batch streams without ignoreChanges."""
+    spark = registered
+    path = str(tmp_path / "sink_fed")
+    tx = TxTable(spark, path)
+    for b in range(2):
+        tx.write_stream_batch(spark.range(3 * b, 3 * b + 3), "app", b)
+    q = (
+        spark.readStream.format("txlog").load(path)
+        .writeStream.format("memory").queryName("txds_sink_fed")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    got = sorted(r["id"] for r in spark.sql("select id from txds_sink_fed").collect())
+    assert got == list(range(6))
 
 
 def test_stream_sink_exactly_once(registered, sf_dir, tmp_path):

@@ -17,6 +17,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from furchild_spark.engine.dbt_yaml import reference_dir  # noqa: E402
 from furchild_spark.queries import QUERIES  # noqa: E402
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -63,6 +64,14 @@ def driver_evidence() -> dict[str, str]:
 
 
 def main() -> None:
+    if reference_dir() is None:
+        # without the checkout the sql_compiled__* entries are not
+        # registered: a rewrite would silently drop their rows
+        sys.exit(
+            "gen_catalog_doc: no reference dbt-project checkout (see "
+            "dbt_yaml.reference_dir: $REFERENCE_DIR or its default), so the "
+            "sql_compiled__* entries are not registered; CATALOG.md not written"
+        )
     evidence = driver_evidence()
     n_green = sum(1 for v in evidence.values() if v.startswith("green"))
     lines = [
