@@ -278,17 +278,11 @@ class TxTable:
         """
         os.makedirs(self.log_dir, exist_ok=True)
         version = base_version + 1
-        # application transaction watermarks (streaming exactly-once) are
-        # carried forward through EVERY commit so the latest manifest is
-        # the single source of truth for them
-        base_txns = (
-            self._read_manifest(base_version).get("txns", {}) if base_version else {}
-        )
         manifest = dict(
             manifest,
             version=version,
             base_version=base_version,
-            txns={**base_txns, **manifest.get("txns", {})},
+            txns=manifest.get("txns", {}),
         )
         tmp = os.path.join(self.log_dir, f"_tmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as fh:
@@ -344,8 +338,13 @@ class TxTable:
             manifest = plan(base, head)
             if not isinstance(manifest, dict):
                 return manifest
+            # application transaction watermarks (streaming exactly-once)
+            # are carried forward through EVERY commit so the latest
+            # manifest is the single source of truth for them
+            txns = dict(head.get("txns", {})) if head else {}
             if txn is not None:
-                manifest["txns"] = {txn[0]: txn[1]}
+                txns[txn[0]] = txn[1]
+            manifest["txns"] = txns
             try:
                 return self._commit(manifest, base)
             except ConcurrentWriteError:

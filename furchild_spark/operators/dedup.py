@@ -28,17 +28,23 @@ from .util import fanout
 # exact dedup
 # ---------------------------------------------------------------------------
 
+def fingerprint(text_col: str):
+    """The exact-dedup key of a document: md5 of its normalized text.
+
+    NULL text canonicalizes to '' so NULL/empty documents share one
+    NON-NULL fingerprint: a groupBy and an anti-join on it then agree (a
+    NULL key would group in one but never match a join in the other).
+    Batch, incremental and streaming exact dedup all key on this column."""
+    return F.md5(F.coalesce(normalize_text(text_col), F.lit("")))
+
+
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Hash-groupBy exact dedup: one row per distinct normalized text with
     the survivor id (min id) and the duplicate count. Single shuffle on the
     128-bit fingerprint; partial aggregation makes the map side do the heavy
     lifting at scale."""
-    # NULL text canonicalizes to '' so NULL/empty documents share one
-    # NON-NULL fingerprint: groupBy and the incremental anti-join then
-    # agree (a NULL key would group here but never match a join there)
-    fp = F.md5(F.coalesce(normalize_text(text_col), F.lit("")))
     return (
-        df.select(F.col(id_col), fp.alias("fingerprint"))
+        df.select(F.col(id_col), fingerprint(text_col).alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(
             F.min(id_col).alias("keep_id"),
@@ -72,15 +78,6 @@ def shingle_sets(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataF
     staged = fanout(df).select(F.col(id_col), tokens(text_col).alias("__toks"))
     return staged.select(
         F.col(id_col), F.array_distinct(shingles("__toks", k)).alias("__sh")
-    )
-
-
-def shingle_set(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """(id, shingle) distinct pairs — the exploded-row view of
-    :func:`shingle_sets` used by exact-Jaccard verification. Still shuffle
-    free: distinctness is established inside each row before the explode."""
-    return shingle_sets(df, id_col, text_col, k).select(
-        F.col(id_col), F.explode("__sh").alias("shingle")
     )
 
 
@@ -165,6 +162,22 @@ def lsh_band_signatures(
     )
 
 
+def band_signatures(
+    sets: DataFrame,
+    id_col: str,
+    num_perm: int = 16,
+    rows_per_band: int = 4,
+    hash_fn: str = "md5",
+) -> DataFrame:
+    """(id, band, band_sig) rows straight from the shingle-set arrays of
+    :func:`shingle_sets`: :func:`minhash_signatures` then
+    :func:`lsh_band_signatures`, both per-row projections, so the chain
+    stays map-only."""
+    return lsh_band_signatures(
+        minhash_signatures(sets, id_col, num_perm, hash_fn), id_col, rows_per_band
+    )
+
+
 def lsh_candidate_pairs(banded: DataFrame, id_col: str) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b) sharing any band signature.
     Self-join on (band, band_sig) — a key-partitioned equi join, NOT a
@@ -183,35 +196,51 @@ def lsh_candidate_pairs(banded: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def jaccard_verify(
-    sets: DataFrame, pairs: DataFrame, id_col: str, threshold: float = 0.5
+def jaccard_verify_cross(
+    sets_new: DataFrame,
+    sets_old: DataFrame,
+    pairs: DataFrame,
+    id_col: str,
+    threshold: float = 0.5,
 ) -> DataFrame:
-    """Exact Jaccard over candidate pairs via shingle-set joins — runs only
-    on the (small) candidate set, so the expensive exactness is bounded by
-    LSH recall, not corpus size. Takes the per-row set representation
-    (:func:`shingle_sets`): set sizes are ``F.size`` (map-only, no groupBy
-    shuffle) and the exploded rows for the intersection join are generated
-    in place."""
-    sh = sets.select(F.col(id_col), F.explode("__sh").alias("shingle"))
-    sizes = sets.select(F.col(id_col), F.size("__sh").alias("sz"))
+    """Exact Jaccard over (id_new, id_old) candidate pairs via shingle-set
+    joins — runs only on the (small) candidate set, so the expensive
+    exactness is bounded by LSH recall, not corpus size. The two sides'
+    per-row set representations (:func:`shingle_sets`) may come from
+    different corpora (incremental and streaming dedup) or be the same
+    frame passed twice (a self-join, :func:`minhash_near_duplicates`).
+    Set sizes are ``F.size`` (map-only, no groupBy shuffle) and the
+    exploded rows for the intersection join are generated in place."""
+    sh_new = sets_new.select(
+        F.col(id_col).alias("id_new"), F.explode("__sh").alias("shingle")
+    )
+    sh_old = sets_old.select(
+        F.col(id_col).alias("id_old"), F.explode("__sh").alias("shingle")
+    )
+    sz_new = sets_new.select(
+        F.col(id_col).alias("id_new"), F.size("__sh").alias("sz_new")
+    )
+    sz_old = sets_old.select(
+        F.col(id_col).alias("id_old"), F.size("__sh").alias("sz_old")
+    )
     # shingle is part of the second join key → stays an equi join (hash
-    # partitioned on (id_b, shingle)), never a filter over a wide product.
+    # partitioned on (id_old, shingle)), never a filter over a wide product.
     inter = (
-        pairs.join(sh.withColumnRenamed(id_col, "id_a"), on="id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b"), on=["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
+        pairs.join(sh_new, on="id_new")
+        .join(sh_old, on=["id_old", "shingle"])
+        .groupBy("id_new", "id_old")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     return (
-        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("sz", "sz_a"), on="id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("sz", "sz_b"), on="id_b")
+        inter.join(sz_new, on="id_new")
+        .join(sz_old, on="id_old")
         .withColumn(
             "jaccard",
             F.col("n_inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter")).cast("double"),
+            / (F.col("sz_new") + F.col("sz_old") - F.col("n_inter")).cast("double"),
         )
         .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", "n_inter", "jaccard")
+        .select("id_new", "id_old", "n_inter", "jaccard")
     )
 
 
@@ -239,10 +268,11 @@ def minhash_near_duplicates(
     # materialize-the-set-representation step a 100 TB run would write to
     # intermediate storage.
     sets = shingle_sets(df, id_col, text_col, shingle_k).persist()
-    sigs = minhash_signatures(sets, id_col, num_perm, hash_fn)
-    banded = lsh_band_signatures(sigs, id_col, rows_per_band)
-    pairs = lsh_candidate_pairs(banded, id_col)
-    return jaccard_verify(sets, pairs, id_col, threshold)
+    banded = band_signatures(sets, id_col, num_perm, rows_per_band, hash_fn)
+    pairs = lsh_candidate_pairs(banded, id_col).toDF("id_new", "id_old")
+    return jaccard_verify_cross(sets, sets, pairs, id_col, threshold).toDF(
+        "id_a", "id_b", "n_inter", "jaccard"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -547,54 +577,13 @@ def exact_dedup_incremental(
     cost is one anti-join keyed on the 128-bit fingerprint, map-side
     combined on the batch side. Nothing about the corpus is rewritten.
     """
-    fp = F.md5(
-        F.coalesce(normalize_text(text_col), F.lit(""))
-    ).alias("fingerprint")
-    corpus_fps = corpus_df.select(fp).distinct()
-    batch = new_df.select(F.col(id_col), fp)
-    intra = batch.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
+    corpus_fps = corpus_df.select(
+        fingerprint(text_col).alias("fingerprint")
+    ).distinct()
+    intra = exact_dedup_groups(new_df, id_col, text_col)
     survivors = intra.join(corpus_fps, on="fingerprint", how="left_anti")
-    return new_df.join(survivors.select(id_col), on=id_col, how="left_semi")
-
-
-def jaccard_verify_cross(
-    sets_new: DataFrame,
-    sets_old: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact Jaccard for (id_new, id_old) candidate pairs whose sides come
-    from different corpora — the two-sided mirror of
-    :func:`jaccard_verify`, same equi-join shape."""
-    sh_new = sets_new.select(
-        F.col(id_col).alias("id_new"), F.explode("__sh").alias("shingle")
-    )
-    sh_old = sets_old.select(
-        F.col(id_col).alias("id_old"), F.explode("__sh").alias("shingle")
-    )
-    sz_new = sets_new.select(
-        F.col(id_col).alias("id_new"), F.size("__sh").alias("sz_new")
-    )
-    sz_old = sets_old.select(
-        F.col(id_col).alias("id_old"), F.size("__sh").alias("sz_old")
-    )
-    inter = (
-        pairs.join(sh_new, on="id_new")
-        .join(sh_old, on=["id_old", "shingle"])
-        .groupBy("id_new", "id_old")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return (
-        inter.join(sz_new, on="id_new")
-        .join(sz_old, on="id_old")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("sz_new") + F.col("sz_old") - F.col("n_inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("id_new", "id_old", "n_inter", "jaccard")
+    return new_df.join(
+        survivors.select(F.col("keep_id").alias(id_col)), on=id_col, how="left_semi"
     )
 
 
@@ -622,11 +611,11 @@ def minhash_neardup_incremental(
     """
     sets_new = shingle_sets(new_df, id_col, text_col, shingle_k).persist()
     sets_old = shingle_sets(corpus_df, id_col, text_col, shingle_k).persist()
-    bands_new = lsh_band_signatures(
-        minhash_signatures(sets_new, id_col, num_perm, hash_fn), id_col, rows_per_band
+    bands_new = band_signatures(
+        sets_new, id_col, num_perm, rows_per_band, hash_fn
     ).select(F.col(id_col).alias("id_new"), "band", "band_sig")
-    bands_old = lsh_band_signatures(
-        minhash_signatures(sets_old, id_col, num_perm, hash_fn), id_col, rows_per_band
+    bands_old = band_signatures(
+        sets_old, id_col, num_perm, rows_per_band, hash_fn
     ).select(F.col(id_col).alias("id_old"), "band", "band_sig")
     pairs = (
         bands_new.join(bands_old, on=["band", "band_sig"])

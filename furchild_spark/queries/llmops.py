@@ -791,9 +791,7 @@ def exact_dedup_incremental(spark, sf_dir):
     batch = d.filter(F.expr(_BATCH_PRED))
     corpus = d.filter(F.expr(_CORPUS_PRED))
     out = dedup.exact_dedup_incremental(batch, corpus, "doc_id", "text")
-    return out.select(
-        "doc_id", F.md5(dedup.normalize_text("text")).alias("fingerprint")
-    )
+    return out.select("doc_id", dedup.fingerprint("text").alias("fingerprint"))
 
 
 @query(

@@ -26,10 +26,11 @@ Final table ≡ the distinct event rows — the oracle is a plain SELECT.
 
 from __future__ import annotations
 
-import shutil
 import tempfile
 
 from pyspark.sql import functions as F
+
+from furchild_spark.streaming.ingest import land
 
 from .catalog import query, table
 
@@ -63,17 +64,8 @@ def streaming_ingest_e2e(spark, sf_dir):
     # land two halves + a redelivery of the first half, one file each
     first = src.filter(F.col("event_id") < 1000)
     second = src.filter(F.col("event_id") >= 1000)
-    for i, (name, df) in enumerate(
-        [("b1", first), ("b2", second), ("b1_redelivered", first)]
-    ):
-        tmp = f"{base}/stage_{i}"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        import glob as _glob
-        import os as _os
-
-        part = _glob.glob(f"{tmp}/part-*.parquet")[0]
-        _os.makedirs(landing, exist_ok=True)
-        shutil.copy(part, f"{landing}/{name}.parquet")
+    for name, df in [("b1", first), ("b2", second), ("b1_redelivered", first)]:
+        land(df, landing, name)
 
     # state partitions sized to the stream, not the session (see
     # stream_stream_join_e2e — same rationale, measured ~2× on this entry)
@@ -128,9 +120,6 @@ def stream_stream_join_e2e(spark, sf_dir):
 
     Citation: the reference has no streaming surface (SURVEY §2.8) —
     engine extra."""
-    import glob as _glob
-    import os as _os
-
     from furchild_spark.engine import materialize as mat
     from furchild_spark.streaming.ingest import stream_stream_attribution
 
@@ -142,21 +131,14 @@ def stream_stream_join_e2e(spark, sf_dir):
     purchases = ev.filter(F.col("event_type") == "purchase").select(*_COLS)
     schema = views.schema
 
-    def land(df, sub):
+    def land_halves(df, sub):
         d = f"{base}/{sub}"
-        _os.makedirs(d, exist_ok=True)
         # two halves, one file each → state must survive trigger boundaries
-        for name, half in [
-            ("h1", df.filter(F.col("event_id") % 2 == 0)),
-            ("h2", df.filter(F.col("event_id") % 2 == 1)),
-        ]:
-            tmp = f"{base}/stage_{sub}_{name}"
-            half.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = _glob.glob(f"{tmp}/part-*.parquet")[0]
-            shutil.copy(part, f"{d}/{name}.parquet")
+        land(df.filter(F.col("event_id") % 2 == 0), d, "h1")
+        land(df.filter(F.col("event_id") % 2 == 1), d, "h2")
         return d
 
-    v_dir, p_dir = land(views, "views"), land(purchases, "purchases")
+    v_dir, p_dir = land_halves(views, "views"), land_halves(purchases, "purchases")
     read = lambda d: (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -223,14 +205,11 @@ def stateful_alerts_e2e(spark, sf_dir):
     batch computation, making a genuinely stateful streaming run fully
     hash-checkable. Threshold 500.0 → ``crossed`` marks the first
     crossing event per user."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
+    import os
 
     from furchild_spark.streaming.stateful import run_stateful_alerts
 
-    base = _tempfile.mkdtemp(prefix="furchild_stateful_e2e_")
+    base = tempfile.mkdtemp(prefix="furchild_stateful_e2e_")
     landing, out_path, ckpt = f"{base}/landing", f"{base}/out", f"{base}/ckpt"
 
     cols = ["user_id", "event_id", "ts", "value"]
@@ -244,15 +223,10 @@ def stateful_alerts_e2e(spark, sf_dir):
         ("b1", src.filter(F.col("ts") < F.lit(split).cast("timestamp"))),
         ("b2", src.filter(F.col("ts") >= F.lit(split).cast("timestamp"))),
     ]
-    _os.makedirs(landing, exist_ok=True)
     for i, (name, df) in enumerate(halves):
-        tmp = f"{base}/stage_{i}"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = _glob.glob(f"{tmp}/part-*.parquet")[0]
-        dst = f"{landing}/{name}.parquet"
-        _shutil.copy(part, dst)
+        dst = land(df, landing, name)
         # strictly increasing mtimes pin the file-source batch order
-        _os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
@@ -331,9 +305,6 @@ def streaming_dedup_e2e(spark, sf_dir):
     oracle replays bootstrap fingerprints and both survivor rounds
     relationally. maxFilesPerTrigger=1 forces the cross-batch state
     dependency to be real."""
-    import glob as _glob
-    import os as _os
-
     from furchild_spark.engine import materialize as mat
     from furchild_spark.streaming.ingest import run_streaming_corpus_dedup
 
@@ -355,14 +326,8 @@ def streaming_dedup_e2e(spark, sf_dir):
         d.filter(F.col("source") == "src5")
         .withColumn("doc_id", F.col("doc_id") + F.lit(200000))
     )
-    for i, (name, df) in enumerate(
-        [("b1", b1), ("b2", b2), ("b1_redelivered", b1)]
-    ):
-        tmp = f"{base}/stage_{i}"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = _glob.glob(f"{tmp}/part-*.parquet")[0]
-        _os.makedirs(landing, exist_ok=True)
-        shutil.copy(part, f"{landing}/{name}.parquet")
+    for name, df in [("b1", b1), ("b2", b2), ("b1_redelivered", b1)]:
+        land(df, landing, name)
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
@@ -510,9 +475,6 @@ def streaming_neardup_e2e(spark, sf_dir):
     doc is an exact self-match in state (Jaccard 1), so the keyed merge
     provably no-ops. The oracle replays both rounds: banded candidates,
     exact-Jaccard verify at 0.5, survivor feedback into round-2 state."""
-    import glob as _glob
-    import os as _os
-
     from furchild_spark.engine import materialize as mat
     from furchild_spark.streaming.ingest import run_streaming_neardup_dedup
 
@@ -539,14 +501,8 @@ def streaming_neardup_e2e(spark, sf_dir):
     ).unionByName(
         variants("src5").withColumn("doc_id", F.col("doc_id") + F.lit(200000))
     )
-    for i, (name, df) in enumerate(
-        [("b1", b1), ("b2", b2), ("b1_redelivered", b1)]
-    ):
-        tmp = f"{base}/stage_{i}"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = _glob.glob(f"{tmp}/part-*.parquet")[0]
-        _os.makedirs(landing, exist_ok=True)
-        shutil.copy(part, f"{landing}/{name}.parquet")
+    for name, df in [("b1", b1), ("b2", b2), ("b1_redelivered", b1)]:
+        land(df, landing, name)
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
@@ -601,7 +557,6 @@ def txlog_stream_sink_e2e(spark, sf_dir):
     table is order-independent; the result is read back through
     ``spark.read.format("txlog")`` — source and sink halves of the
     data source composed in one entry."""
-    import glob
     import os
 
     from furchild_spark.engine.txlog import TxTable
@@ -616,7 +571,6 @@ def txlog_stream_sink_e2e(spark, sf_dir):
     register_txlog(spark)
     base = tempfile.mkdtemp(prefix="furchild_txlog_sink_e2e_")
     landing, table_path = f"{base}/landing", f"{base}/table"
-    os.makedirs(landing)
 
     src = (
         table(spark, sf_dir, "events")
@@ -625,13 +579,8 @@ def txlog_stream_sink_e2e(spark, sf_dir):
     )
     first = src.filter(F.col("event_id") < 1000)
     second = src.filter(F.col("event_id") >= 1000)
-    for i, (name, df) in enumerate([("b1", first), ("b2", second)]):
-        tmp = f"{base}/stage_{i}"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.copy(
-            glob.glob(f"{tmp}/part-*.parquet")[0],
-            f"{landing}/{name}.parquet",
-        )
+    land(first, landing, "b1")
+    land(second, landing, "b2")
 
     q = (
         spark.readStream.schema(src.schema)
@@ -650,14 +599,7 @@ def txlog_stream_sink_e2e(spark, sf_dir):
     # simulate at-least-once redelivery of the LAST batch: same batch
     # id, fresh duplicate file — must be a no-op that drops the file
     dup_rel = "data/replay/dup.parquet"
-    os.makedirs(f"{table_path}/data/replay", exist_ok=True)
-    first.limit(5).coalesce(1).write.mode("overwrite").parquet(
-        f"{base}/dupstage"
-    )
-    shutil.copy(
-        glob.glob(f"{base}/dupstage/part-*.parquet")[0],
-        f"{table_path}/{dup_rel}",
-    )
+    land(first.limit(5), f"{table_path}/data/replay", "dup")
     w = TxLogStreamArrowWriter(
         table_path, src.schema, {"txnappid": "sink_e2e"}
     )

@@ -40,6 +40,7 @@ yields nulls for columns an old file predates, exactly like
 
 from __future__ import annotations
 
+import errno
 import json
 import os
 
@@ -264,7 +265,8 @@ class TxLogArrowWriter(DataSourceArrowWriter):
     manifest through ``TxTable._commit_loop`` — the one commit loop
     every TxTable write uses, hard-link claim and re-plan on a lost race
     included. Files from failed/aborted attempts are never referenced by
-    any manifest (and :meth:`abort` unlinks the reported ones), so
+    any manifest (and :meth:`abort` unlinks the reported ones and
+    their commit dirs), so
     readers can't see partial writes — vacuum sweeps any orphans a hard
     crash leaves.
 
@@ -332,10 +334,17 @@ class TxLogArrowWriter(DataSourceArrowWriter):
             if not m:
                 continue
             for e in m.entries:
+                path = os.path.join(self.table_dir, e["path"])
                 try:
-                    os.unlink(os.path.join(self.table_dir, e["path"]))
+                    os.unlink(path)
                 except FileNotFoundError:
                     pass
+                # then the task's commit dir, which held only that file
+                try:
+                    os.rmdir(os.path.dirname(path))
+                except OSError as exc:
+                    if exc.errno not in (errno.ENOENT, errno.ENOTEMPTY):
+                        raise
 
 
 class TxLogStreamArrowWriter(DataSourceStreamArrowWriter):

@@ -23,12 +23,24 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from furchild_spark.engine import materialize as mat
+from furchild_spark.operators.dedup import (
+    band_signatures,
+    exact_dedup,
+    exact_dedup_groups,
+    fingerprint,
+    jaccard_verify_cross,
+    shingle_sets,
+)
 
 
 def read_bronze_stream(
@@ -43,6 +55,59 @@ def read_bronze_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(src_dir)
+
+
+def land(df: DataFrame, src_dir: str, name: str) -> str:
+    """Land ``df`` as ONE parquet file ``<src_dir>/<name>.parquet`` — the
+    flat layout a file-source stream lists (it discovers files, not a
+    tree), and the shape of an EL tool's drop. Spark writes the frame into
+    a hidden staging dir inside ``src_dir`` (file sources skip dot-names)
+    and the single part file is renamed into place, so a running stream
+    never lists a half-written file. Returns the landed file's path."""
+    os.makedirs(src_dir, exist_ok=True)
+    dst = os.path.join(src_dir, f"{name}.parquet")
+    stage = tempfile.mkdtemp(prefix=".land_", dir=src_dir)
+    try:
+        df.coalesce(1).write.mode("overwrite").parquet(stage)
+        os.replace(glob.glob(os.path.join(stage, "part-*.parquet"))[0], dst)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    return dst
+
+
+def _start(stream: DataFrame, sink, checkpoint_dir: str, available_now: bool):
+    """Start ``stream`` into the ``foreachBatch`` ``sink`` —
+    ``available_now`` drains the current backlog and stops, otherwise the
+    query runs continuously."""
+    writer = (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _upsert(
+    spark: SparkSession,
+    path: str,
+    df: DataFrame,
+    unique_key: str,
+    partition_by: tuple[str, ...] = (),
+    keep_newer_ts: str | None = None,
+    return_table: bool = False,
+):
+    """Merge ``df`` into the parquet table at ``path`` on ``unique_key``,
+    or create the table from ``df`` if there is none yet (a sink's first
+    trigger). Calls go through the ``mat`` module attribute, so a wrapper
+    installed on ``materialize`` sees every sink write."""
+    if mat.parquet_exists(spark, path):
+        return mat.merge_upsert(
+            spark, path, df, unique_key, partition_by,
+            keep_newer_ts=keep_newer_ts, return_table=return_table,
+        )
+    return mat.overwrite(spark, path, df, partition_by, return_table=return_table)
 
 
 def dedup_within_watermark(
@@ -80,20 +145,16 @@ def merge_sink(
     from pyspark.sql import Window
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         w = Window.partitionBy(unique_key).orderBy(F.desc_nulls_last(ts_col))
         latest = (
             batch_df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        if mat.parquet_exists(spark, path):
-            mat.merge_upsert(
-                spark, path, latest, unique_key, partition_by,
-                keep_newer_ts=ts_col, return_table=False,
-            )
-        else:
-            mat.overwrite(spark, path, latest, partition_by, return_table=False)
+        _upsert(
+            batch_df.sparkSession, path, latest, unique_key, partition_by,
+            keep_newer_ts=ts_col,
+        )
 
     return sink
 
@@ -119,16 +180,10 @@ def run_ingest(
     triggers)."""
     stream = read_bronze_stream(spark, src_dir, schema, max_files_per_trigger)
     deduped = dedup_within_watermark(stream, unique_key, ts_col, watermark_delay)
-    writer = (
-        deduped.writeStream.foreachBatch(
-            merge_sink(table_path, unique_key, ts_col, partition_by)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _start(
+        deduped, merge_sink(table_path, unique_key, ts_col, partition_by),
+        checkpoint_dir, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_exact_dedup(
@@ -147,11 +202,11 @@ def streaming_exact_dedup(
     watermark evicts older fingerprints, bounding state by the dedup
     horizon, not corpus size. (Exact global dedup over all history is the
     batch operator's job; streaming dedup exists to stop the continuous
-    firehose's redundancy near the source.)"""
-    from furchild_spark.operators.text import normalize_text
-
+    firehose's redundancy near the source.) The key is the batch
+    operator's ``fingerprint``, so NULL and blank text are one document
+    here as they are there."""
     return (
-        stream_df.withColumn("fingerprint", F.md5(normalize_text(text_col)))
+        stream_df.withColumn("fingerprint", fingerprint(text_col))
         .withWatermark(ts_col, delay)
         .dropDuplicatesWithinWatermark(["fingerprint"])
     )
@@ -339,34 +394,22 @@ def run_streaming_corpus_dedup(
     already state) and the merges no-op — idempotent without relying on
     the checkpoint alone.
     """
-    from furchild_spark.operators.text import normalize_text
-
-    def fp_of(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.md5(
-                F.coalesce(normalize_text(text_col), F.lit(""))
-            ).alias("fingerprint"),
-            F.col(id_col),
+    def survivors(df: DataFrame) -> DataFrame:
+        # (fingerprint, min id): the batch exact-dedup groups
+        return exact_dedup_groups(df, id_col, text_col).select(
+            "fingerprint", F.col("keep_id").alias(id_col)
         )
 
     # bootstrap the state table from the corpus (min-id canonical per
     # fingerprint — one aggregate, run once; in production this table is
     # maintained at ingest, never rebuilt)
     if not mat.parquet_exists(spark, fp_path):
-        mat.overwrite(
-            spark, fp_path,
-            fp_of(corpus_df).groupBy("fingerprint").agg(
-                F.min(id_col).alias(id_col)
-            ),
-            return_table=False,
-        )
+        mat.overwrite(spark, fp_path, survivors(corpus_df), return_table=False)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
         state = mat.read_table(s, fp_path)
-        intra = fp_of(batch_df).groupBy("fingerprint").agg(
-            F.min(id_col).alias(id_col)
-        )
+        intra = survivors(batch_df)
         # never shuffle state: an anti-join with the state table as the
         # right side re-shuffles the ENTIRE fingerprint state per
         # trigger. Broadcasting the batch's fingerprints pre-filters
@@ -385,21 +428,11 @@ def run_streaming_corpus_dedup(
         accepted = batch_df.join(
             F.broadcast(surv.select(id_col)), on=id_col, how="left_semi"
         )
-        if mat.parquet_exists(s, table_path):
-            mat.merge_upsert(s, table_path, accepted, id_col, return_table=False)
-        else:
-            mat.overwrite(s, table_path, accepted, return_table=False)
+        _upsert(s, table_path, accepted, id_col)
         mat.merge_upsert(s, fp_path, surv, "fingerprint", return_table=False)
 
     stream = read_bronze_stream(spark, src_dir, schema, max_files_per_trigger)
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, sink, checkpoint_dir, available_now)
 
 
 def run_streaming_neardup_dedup(
@@ -448,47 +481,33 @@ def run_streaming_neardup_dedup(
     self-matches in state (Jaccard 1 ≥ threshold), so they reject and
     the keyed merge no-ops.
     """
-    from furchild_spark.operators.dedup import (
-        jaccard_verify_cross,
-        lsh_band_signatures,
-        minhash_signatures,
-        shingle_sets,
-    )
-    from furchild_spark.operators.text import normalize_text
-
     sets_path, bands_path = f"{table_path}__sets", f"{table_path}__bands"
 
-    def bands_of(sets_df: DataFrame) -> DataFrame:
-        return lsh_band_signatures(
-            minhash_signatures(sets_df, id_col), id_col
-        )
-
-    # bootstrap the sidecar state from the corpus, once
-    if not mat.parquet_exists(spark, sets_path):
+    # bootstrap the sidecar state from the corpus, once — and again if
+    # either sidecar is missing: __bands is written second, so a crash
+    # between the two writes leaves __sets alone, and every trigger would
+    # then fail reading __bands
+    if not (
+        mat.parquet_exists(spark, sets_path)
+        and mat.parquet_exists(spark, bands_path)
+    ):
         corpus_sets = shingle_sets(
             corpus_df, id_col, text_col
         ).localCheckpoint()
         mat.overwrite(spark, sets_path, corpus_sets, return_table=False)
         mat.overwrite(
-            spark, bands_path, bands_of(corpus_sets), return_table=False
+            spark, bands_path, band_signatures(corpus_sets, id_col),
+            return_table=False,
         )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
-        fp = F.md5(
-            F.coalesce(normalize_text(text_col), F.lit(""))
-        ).alias("__fp")
-        intra = (
-            batch_df.select(F.col(id_col), fp)
-            .groupBy("__fp")
-            .agg(F.min(id_col).alias(id_col))
-        )
-        batchd = batch_df.join(
-            intra.select(id_col), on=id_col, how="left_semi"
+        batchd = exact_dedup(
+            batch_df, id_col, text_col
         ).localCheckpoint()  # several consumers, and the downstream plans
         # re-read tables this sink writes
         sets_new = shingle_sets(batchd, id_col, text_col).localCheckpoint()
-        bands_new = bands_of(sets_new)
+        bands_new = band_signatures(sets_new, id_col)
         # membership filter: only state rows the accepted table (or the
         # corpus) vouches for may reject — an orphan sidecar row from a
         # crash between merge and append is inert until healed
@@ -555,10 +574,7 @@ def run_streaming_neardup_dedup(
         surv = batchd.join(F.broadcast(near), on=id_col, how="left_anti")
         # commit point (the merge/overwrite RETURNS the post-merge table,
         # so the heal below reads accepted membership without a re-read)
-        if mat.parquet_exists(s, table_path):
-            accepted = mat.merge_upsert(s, table_path, surv, id_col)
-        else:
-            accepted = mat.overwrite(s, table_path, surv)
+        accepted = _upsert(s, table_path, surv, id_col, return_table=True)
         # heal the sidecars from accepted membership (idempotent: only
         # rows the sidecar does not already hold are appended). Each
         # sidecar computes its OWN add-set against its OWN membership: a
@@ -612,11 +628,4 @@ def run_streaming_neardup_dedup(
         )
 
     stream = read_bronze_stream(spark, src_dir, schema, max_files_per_trigger)
-    writer = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, sink, checkpoint_dir, available_now)

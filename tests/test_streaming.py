@@ -22,17 +22,8 @@ TS = dt.datetime(2024, 6, 1, 12, 0, 0)
 
 
 def _land(spark, src_dir: str, rows: list[Row], batch: str) -> None:
-    """Land one bronze file into the flat landing dir (file streams list a
-    directory, not a tree)."""
-    import glob
-    import shutil
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as tmp:
-        out = os.path.join(tmp, "out")
-        spark.createDataFrame(rows).coalesce(1).write.parquet(out)
-        part = glob.glob(os.path.join(out, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(src_dir, f"{batch}.parquet"))
+    """Land one bronze file of ``rows`` into the flat landing dir."""
+    ingest.land(spark.createDataFrame(rows), src_dir, batch)
 
 
 def _schema(spark, rows):
@@ -186,6 +177,10 @@ def test_streaming_exact_dedup_across_batches(spark, dirs):
         Row(doc_id=1, text="The Quick Fox", ts=base),
         Row(doc_id=2, text="  the   quick fox ", ts=base),      # dup (normalized)
         Row(doc_id=3, text="something else", ts=base),
+        # NULL and whitespace-only text share the batch operator's
+        # fingerprint (md5 of ''): one of them survives, as in exact_dedup
+        Row(doc_id=6, text=None, ts=base),
+        Row(doc_id=7, text="   ", ts=base),
     ]
     _land(spark, src, rows1, "b1")
     stream = ingest.read_bronze_stream(spark, src, _schema(spark, rows1))
@@ -204,7 +199,9 @@ def test_streaming_exact_dedup_across_batches(spark, dirs):
         q.awaitTermination()
         return sorted(r["doc_id"] for r in spark.read.parquet(out_dir).collect())
 
-    assert drain() == [1, 3]  # doc 2 deduped within the batch
+    first = drain()
+    # doc 2 deduped within the batch, and one of the NULL/blank pair
+    assert first in ([1, 3, 6], [1, 3, 7])
     # batch 2: another copy of the fox text (cross-batch dup) + new text
     _land(
         spark, src,
@@ -212,7 +209,7 @@ def test_streaming_exact_dedup_across_batches(spark, dirs):
          Row(doc_id=5, text="brand new", ts=base + dt.timedelta(hours=1))],
         "b2",
     )
-    assert drain() == [1, 3, 5]  # doc 4 dropped by the state store
+    assert drain() == sorted(first + [5])  # doc 4 dropped by the state store
 
 
 def test_stream_static_enrichment_join(spark, dirs):
@@ -287,9 +284,9 @@ def test_neardup_sidecar_heal_is_per_sidecar(spark, tmp_path):
     its own add-set) — otherwise future near-dups of that accepted doc
     are never band candidates and silently pass."""
     from furchild_spark.engine import materialize as mat
+    from furchild_spark.operators.dedup import shingle_sets
 
     src = str(tmp_path / "landing")
-    os.makedirs(src)
     accepted = str(tmp_path / "accepted")
     ckpt = str(tmp_path / "ckpt")
 
@@ -306,6 +303,13 @@ def test_neardup_sidecar_heal_is_per_sidecar(spark, tmp_path):
             checkpoint_dir=ckpt, threshold=0.5, available_now=True,
         )
         q.awaitTermination()
+
+    # a crash inside the bootstrap, between its two writes, leaves the
+    # corpus __sets without __bands: the next start must bootstrap both
+    mat.overwrite(
+        spark, f"{accepted}__sets", shingle_sets(corpus, "doc_id", "text"),
+        return_table=False,
+    )
 
     # batch 1: X is novel -> accepted, sets+bands written
     _land(spark, src, [x], "b1")

@@ -264,6 +264,7 @@ def test_stream_batch_idempotence_and_restart(spark):
     # another app's stream is tracked independently
     assert t2.last_txn("appB") == -1
     assert t2.write_stream_batch(spark.createDataFrame(_rows(1, start=90)), "appB", 0) == 3
+    assert t2.last_txn("appA") == 1  # appB's commit carried appA's watermark
     assert t2.snapshot().count() == 6
 
 
@@ -286,27 +287,18 @@ def test_foreach_batch_sink_end_to_end(spark, tmp_path):
     the second drain processes only new files and the table stays
     exactly-once even though the sink ran under Spark's at-least-once
     contract."""
-    import glob as globmod
-    import shutil as shutilmod
+    from furchild_spark.streaming.ingest import land
 
-    src = tmp_path / "landing"
-    src.mkdir()
+    src = str(tmp_path / "landing")
     ckpt = str(tmp_path / "ckpt")
-
-    def land(rows, name):
-        out = str(tmp_path / f"stage_{name}")
-        spark.createDataFrame(rows).coalesce(1).write.parquet(out)
-        part = globmod.glob(os.path.join(out, "part-*.parquet"))[0]
-        shutilmod.move(part, str(src / f"{name}.parquet"))
-
-    land(_rows(3), "b1")
+    land(spark.createDataFrame(_rows(3)), src, "b1")
     schema = spark.createDataFrame(_rows(1)).schema
     t = TxTable(spark, str(tmp_path / "t"))
 
     def drain():
         q = (
             spark.readStream.schema(schema)
-            .parquet(str(src))
+            .parquet(src)
             .writeStream.foreachBatch(t.foreach_batch_sink("ingest"))
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -316,7 +308,7 @@ def test_foreach_batch_sink_end_to_end(spark, tmp_path):
 
     drain()
     assert t.snapshot().count() == 3
-    land(_rows(2, start=3), "b2")
+    land(spark.createDataFrame(_rows(2, start=3)), src, "b2")
     drain()
     assert t.snapshot().count() == 5
     assert t.snapshot().select("k").distinct().count() == 5
@@ -334,7 +326,8 @@ def test_compact_small_files(spark):
     m = t._read_manifest(v)
     assert m["num_files"] < n_files_before
     assert {tuple(r) for r in t.snapshot().collect()} == rows_before
-    # compaction preserved the streaming watermark (carried by _commit)
+    # compaction preserved the streaming watermark (carried by the
+    # commit loop)
     assert t.last_txn("app") == 3
     # and a redelivered old batch is still a no-op after compaction
     assert t.write_stream_batch(spark.createDataFrame(_rows(5)), "app", 3) is None

@@ -224,6 +224,9 @@ def test_write_append_schema_mismatch_is_loud(registered, sf_dir, tmp_path):
     assert tx.current_version() == 1
     assert len(tx.snapshot().collect()) == orders.count()
     assert len(spark.read.format("txlog").load(path).collect()) == orders.count()
+    # the rejected tasks' files went on abort, and their commit dirs too
+    data = os.path.join(path, "data")
+    assert all(os.listdir(os.path.join(data, d)) for d in os.listdir(data))
 
 
 def test_stream_reads_table_fed_by_streaming_sink(registered, tmp_path):
@@ -250,34 +253,21 @@ def test_stream_sink_exactly_once(registered, sf_dir, tmp_path):
     commits; with txnAppId a REDELIVERED batch id commits nothing and
     leaves no orphan manifest references (the Delta txnAppId/txnVersion
     pattern, watermark and data in one atomic commit)."""
-    import glob
-    import shutil
-
     import pyarrow as pa
 
     from furchild_spark.sources.txlog_datasource import (
         TxLogStreamArrowWriter,
         _TxWriteMessage,
     )
+    from furchild_spark.streaming.ingest import land
 
     spark = registered
     path = str(tmp_path / "sink_tx")
     src = str(tmp_path / "src")
-    os.makedirs(src)
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-
-    def land(df, name):
-        # the file-stream source lists FLAT files (and a pandas-written
-        # parquet drops the NTZ annotation) — write with Spark, move the
-        # part file in
-        tmp = str(tmp_path / ("tmp_" + name))
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.move(
-            glob.glob(os.path.join(tmp, "part-*.parquet"))[0],
-            os.path.join(src, name),
-        )
-
-    land(orders.limit(20), "b0.parquet")
+    # written with Spark, not pandas: a pandas-written parquet drops the
+    # NTZ annotation
+    land(orders.limit(20), src, "b0")
 
     q = (
         spark.readStream.schema(orders.schema).parquet(src)
@@ -293,7 +283,7 @@ def test_stream_sink_exactly_once(registered, sf_dir, tmp_path):
     assert tx.last_txn("sink-test") >= 0
 
     # second trigger with more data: only the delta commits
-    land(orders.limit(35), "b1.parquet")
+    land(orders.limit(35), src, "b1")
     q = (
         spark.readStream.schema(orders.schema).parquet(src)
         .writeStream.format("txlog")
@@ -326,6 +316,7 @@ def test_stream_sink_exactly_once(registered, sf_dir, tmp_path):
     w.commit([msg], batchId=tx.last_txn("sink-test"))  # replayed id
     assert tx.current_version() == before  # nothing committed
     assert not os.path.exists(dup_file)  # duplicate files dropped
+    assert not os.path.exists(dup_dir)  # and their commit dir
     assert tx.count() == 55
 
 
